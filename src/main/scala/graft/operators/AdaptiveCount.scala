@@ -3,12 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Session-scoped memo for the ONE eager `count()` that adaptive
-  * parameter resolution runs at plan-build time (Similarity's banding,
-  * Dedup's minhash tiers, SemDeDup's cluster count). Each call used to
-  * pay a fresh count job — metadata-only for parquet, but at 100 TB a
-  * full footer/metadata scan per OPERATOR CALL over the same corpus is
-  * a real cost multiplier (VERDICT r14 #3). The memo collapses that to
-  * one count per corpus snapshot per session.
+  * parameter resolution runs at plan-build time ([[Banded.resolve]] for
+  * the banded families, SemDeDup's cluster count): one count per corpus
+  * snapshot per session, not a footer/metadata scan per operator call.
   *
   * Cache key = (session identity, plan semantic hash, input-file list
   * hash). The file-list component is what makes a same-path OVERWRITE
@@ -21,18 +18,16 @@ import org.apache.spark.sql.DataFrame
   * file index was already materialized when the plan was analyzed, so
   * no job runs on a cache hit OR for the key itself.
   *
-  * Hash keys alone are not identity (ADVICE r15): a hash collision —
-  * or `identityHashCode` reuse after a stopped session is GC'd — would
-  * silently serve another corpus's count, a correctness-bearing value.
-  * So the cached VALUE carries the actual file list, a weak session
-  * reference, AND a sha-256 digest of the canonicalized plan (ADVICE
-  * r16 #3: two plans over the SAME files — a corpus and its filtered
-  * slice — share session and file list and differ only in the 32-bit
-  * semanticHash, so without the digest that pair was still trusted by
-  * hash alone). A hit is honored only after confirming all three by
-  * equality; any mismatch falls back to a fresh count (recorded as a
-  * miss) and replaces the entry. The session reference is weak so the
-  * memo never pins a stopped session's object graph. */
+  * Hash keys alone are not identity: a hash collision — or
+  * `identityHashCode` reuse after a stopped session is GC'd — would
+  * silently serve another corpus's count. So the cached VALUE carries
+  * the actual file list, a weak session reference, AND a sha-256 digest
+  * of the canonicalized plan (a corpus and its filtered slice share
+  * session and file list and differ only in the 32-bit semanticHash).
+  * A hit is honored only after confirming all three by equality; any
+  * mismatch falls back to a fresh count (recorded as a miss) and
+  * replaces the entry. The session reference is weak so the memo never
+  * pins a stopped session's object graph. */
 private[graft] object AdaptiveCount {
 
   /** Cache value: the count plus the evidence that the key really is
@@ -46,10 +41,9 @@ private[graft] object AdaptiveCount {
   private[graft] val cache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Entry]()
 
-  /** Count jobs actually run (cache misses) — spec-pinned so the
-    * one-count-per-corpus-per-session contract can't silently rot, and
-    * surfaced in the Bench/Verify diag JSON (VERDICT r15 #5) so every
-    * committed artifact shows the contract holding. */
+  /** Count jobs actually run (cache misses) — spec-pinned, and surfaced
+    * in the Bench/Verify diag JSON so every committed artifact shows the
+    * one-count-per-corpus-per-session contract holding. */
   private[graft] val misses = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Backstop against unbounded growth in a session that churns

@@ -1,9 +1,9 @@
 package graft.operators
 
 /** The ONE spelling of the LSH collision-side posting-cap keep rule,
-  * shared by the embedding family (Similarity.truncateBuckets) and the
-  * text MinHash family (Dedup), with a DuckDB twin so every oracle
-  * interpolates the identical arithmetic and the two engines'
+  * applied by the banded core's truncation ([[Banded.truncate]]) for
+  * every capped near-duplicate family, with a DuckDB twin so every
+  * oracle interpolates the identical arithmetic and the two engines'
   * truncation rules cannot drift.
   *
   * Rule: a bucket of size `bsz <= cap` passes through UNTOUCHED (the

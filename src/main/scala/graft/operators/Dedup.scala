@@ -20,13 +20,6 @@ import graft.functions.TextExpr._
   */
 object Dedup {
 
-  /** Largest batch band-key table (rows = nBands x |batch|) the
-    * incremental probe will still broadcast-hint: ~1M keys of
-    * (int, md5-string, long) ≈ 50 MB serialized — safely inside a
-    * multi-GB driver, far above any gated batch. Larger batches fall
-    * back to plain shuffle joins on the band key (same results). */
-  val MaxBroadcastBandKeys: Long = 1L << 20
-
   /** doc → normalized tokens + distinct 3-gram shingle set. Tokenization
     * uses the fused native expression (functions.TextNative), whose
     * output is spec-identical to TextExpr.toksSpark. */
@@ -186,52 +179,47 @@ object Dedup {
   /** MinHash-LSH near-duplicate pairs, exact-Jaccard-verified.
     *
     * k signature components are grouped into `k/rows` bands; docs sharing
-    * any band key become candidates (equi-join on the band hash — this is
+    * any band key become candidates (the [[Banded]] band-key equi-join —
     * the shuffle-bounded step); candidates are verified with exact
     * Jaccard over distinct shingle sets and filtered by `threshold`.
     *
-    * The collision (y) side rides [[truncateBands]] with `bucketCap`
-    * (identity at gated scale; [[BucketCap]]'s hash rule above it), so
-    * a degenerate band value — the boilerplate-heavy near-dup-rich
-    * corpus this operator exists for — costs `nBands × N × cap`
-    * candidates (linear in N) instead of Σ n_b² before verify. Every
-    * doc still probes with its full band set, so the cap trades
-    * bounded recall inside an over-cap bucket, never precision (all
-    * emitted pairs are exact-verified). */
+    * The collision side is capped at `bucketCap` per bucket (identity at
+    * gated scale; [[BucketCap]]'s hash rule above it), so a degenerate
+    * band value — the boilerplate-heavy near-dup-rich corpus this
+    * operator exists for — costs `nBands × N × cap` candidates (linear
+    * in N) instead of Σ n_b² before verify. Every doc still probes with
+    * its full band set, so recall is exact only for buckets at or under
+    * the cap; above it the cap trades bounded recall, never precision
+    * (all emitted pairs are exact-verified). */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = AdaptiveMinhash, rows: Int = AdaptiveMinhash,
       threshold: Double = 0.5,
       bucketCap: Int = BucketCap.DefaultCap): DataFrame = {
     val (kk, rr) = resolveMinhash(df, k, rows)
     graft.functions.TextNative.register(df.sparkSession)
-    // Signatures only — the shingle sets are NOT materialized corpus-wide.
-    // cache() pins the one-pass signature (id + k hex strings, ~100 B/doc,
-    // MEMORY_AND_DISK so it spills rather than OOMs) so band construction
-    // can't re-evaluate the minhash per band reference. The cache must
-    // outlive this call (the returned lazy plan references it); callers
-    // running many pipelines in one session reclaim it via
-    // spark.catalog.clearCache() or by unpersisting after materializing.
+    // Signatures only (~100 B/doc), cached so band construction can't
+    // re-evaluate the minhash per band reference; the returned lazy plan
+    // references the cache, so callers reclaim it (clearCache/unpersist).
     val sig = Par.widen(df).select(col(idCol),
       expr(s"graft_minhash($textCol, $kk)").as("_sig")).cache()
-    val bands = bandsOf(sig, idCol, kk, rr)
-    val cand = bands.as("x")
-      .join(truncateBands(bands, idCol, bucketCap).as("y"),
-        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-      .distinct()
+    val cand = Banded.pairs(bandsOf(sig, idCol, kk, rr), bandLayout(idCol),
+      bucketCap)
     verifyJaccard(cand, df, idCol, textCol, threshold)
   }
 
+  /** The text band table's [[Banded.Layout]]: md5 band values are
+    * unbounded-cardinality, so no size table over them is broadcast
+    * corpus-wide (an incremental probe counts its batch instead). */
+  private[graft] def bandLayout(idCol: String): Banded.Layout =
+    Banded.Layout(Seq("bi", "bv"), idCol, None)
+
+  private val Banding = Banded.Params("k", "rows", "writeBandIndex")
+
   /** Sentinel default for `k`/`rows`: resolve the minhash banding from
-    * the corpus count at plan-build time ([[adaptiveMinhashParams]]) —
-    * the text twin of Similarity.AdaptiveBands (VERDICT r13 #2: the
-    * embedding side's fixed-banding recall collapse is measured; the
-    * text side ships the same compile-time-constant shape, so it gets
-    * the same remedy). Pass explicit values to pin a banding
-    * (persisted-index probes must match their index — see the
-    * `_banding` metadata). */
-  val AdaptiveMinhash: Int = -1
+    * the corpus count at plan-build time ([[adaptiveMinhashParams]]).
+    * Pass explicit values to pin a banding (persisted-index probes must
+    * match their index — see the `_banding` metadata). */
+  val AdaptiveMinhash: Int = Banded.Adaptive
 
   /** Scale-adaptive minhash banding (k signature size, rows per band):
     * rows r grows by ONE per decade past 65,536 docs, clamped to
@@ -243,18 +231,11 @@ object Dedup {
     * at scale) falls geometrically: a pair at jaccard j collides per
     * band with probability j^r. k = r · 2^r: (8, 2) → (24, 3) →
     * (64, 4). Every gated corpus (≤ 50k docs at sf1) resolves to
-    * today's (8, 2), so the oracles — which interpolate the same
-    * constants — are unchanged. MEASURED at sf10 (tools.TextScaleProbe,
-    * 500k docs, exact prefix-filter ground truth, SURVEY §6 r14): both
-    * (8,2) AND (24,3) recover recall 1.0 with IDENTICAL pair sets at
-    * near-identical cost (193.5 s vs 180.9 s) — unlike the vector
-    * family, text buckets are unbounded minhash tuples that only fill
-    * with genuinely similar docs, so BucketCap truncation has no
-    * dissimilar-neighbor mass to lose at this corpus's clone
-    * structure. The adaptive tier is therefore kept for its
-    * S-curve-midpoint INVARIANT (sub-threshold collision mass falls
-    * geometrically as corpora grow adversarial) at measured-zero cost,
-    * not as a rescue of a measured collapse. */
+    * (8, 2), the constants the oracles interpolate. At sf10
+    * (tools.TextScaleProbe, SURVEY §6) (8,2) and (24,3) both recover
+    * recall 1.0 at near-identical cost: the tier is kept for the
+    * S-curve-midpoint invariant on adversarial corpora, not to rescue a
+    * measured collapse. */
   def adaptiveMinhashParams(n: Long): (Int, Int) = {
     require(n >= 0)
     val r = if (n <= 65536L) 2 else if (n <= 655360L) 3 else 4
@@ -262,67 +243,10 @@ object Dedup {
   }
 
   /** Resolve a (k, rows) pair that may carry the [[AdaptiveMinhash]]
-    * sentinel — one narrow eager count; explicit pairs pass through
-    * with the divisibility check. */
+    * sentinel ([[Banded.resolve]]). */
   private def resolveMinhash(df: DataFrame, k: Int, rows: Int)
-      : (Int, Int) = {
-    if (k != AdaptiveMinhash && rows != AdaptiveMinhash) {
-      require(k % rows == 0,
-        s"band rows ($rows) must divide signature size ($k) — trailing " +
-          "components would be silently dropped")
-      return (k, rows)
-    }
-    require(k == AdaptiveMinhash && rows == AdaptiveMinhash,
-      s"pass BOTH k and rows or NEITHER (got k=$k, rows=$rows)")
-    require(!df.isStreaming,
-      "adaptive minhash banding resolves via an eager count, which a " +
-        "streaming frame cannot run — pass the explicit (k, rows) the " +
-        "persisted index or setup phase chose")
-    // memoized per corpus snapshot: one count job per session, not per
-    // operator call (VERDICT r14 #3) — see [[AdaptiveCount]]
-    adaptiveMinhashParams(AdaptiveCount.of(df))
-  }
-
-  /** Per-(bi, bv) band-bucket sizes of a band table — the text twin of
-    * the embedding side's (band, bucket) size aggregate. Unlike that
-    * side (≤ nBands·2^bandBits rows), md5 band values are
-    * unbounded-cardinality, so this table is O(distinct buckets) ~
-    * O(N) and must be JOINED on the band key, never broadcast
-    * corpus-wide. */
-  private[graft] def bandSizes(bands: DataFrame): DataFrame =
-    bands.groupBy("bi", "bv").agg(count(lit(1)).as("graft_bsz"))
-
-  /** Bound a MinHash band table's per-(bi, bv) posting list to ~`cap`
-    * deterministic representatives — the text twin of
-    * Similarity.truncateBuckets, sharing [[BucketCap]]'s
-    * distribution-independent hash keep rule (identity for buckets at
-    * or under `cap`; see that object's scaladoc). The size join rides
-    * the SAME (bi, bv) key as the collision join it feeds, so the only
-    * added shuffle is the tiny partial-agg exchange for the size
-    * table. */
-  private[graft] def truncateBands(bands: DataFrame, idCol: String,
-      cap: Int): DataFrame =
-    truncateBandsWith(bands, bandSizes(bands), idCol, cap)
-
-  /** [[truncateBands]] against a CALLER-SUPPLIED size table
-    * `sizes(bi, bv, graft_bsz)` — the incremental path's variant, so
-    * both of its collision sides truncate by the COMBINED
-    * (corpus + batch) bucket sizes: keep(id) is a pure function of
-    * (id, bucket size), so per-side truncation under the union's
-    * sizes equals truncating the union table, and
-    * `incrementalPairs == minhashPairs(corpus ∪ batch) restricted to
-    * batch-touching pairs` holds EXACTLY for DISJOINT batches, capped
-    * or not (a replayed batch double-counts in the sizes — recall-only
-    * degradation inside over-cap buckets, never a wrong pair; the
-    * x<y / =!= guards still strip self-pairs). Callers pass a
-    * broadcast()-hinted `sizes` only when it is provably batch-sized
-    * (the incremental path's batch-touched keys); the one-shot path's
-    * corpus-wide sizes stay join-distributed. */
-  private[graft] def truncateBandsWith(bands: DataFrame, sizes: DataFrame,
-      idCol: String, cap: Int): DataFrame =
-    bands.join(sizes, Seq("bi", "bv"))
-      .filter(expr(BucketCap.keepSql(s"`$idCol`", "graft_bsz", cap)))
-      .drop("graft_bsz")
+      : (Int, Int) =
+    Banded.resolve(df, Banding, k, rows, adaptiveMinhashParams)
 
   /** Band rows (id, bi, bv) from a signature frame (id, _sig). */
   private def bandsOf(sig: DataFrame, idCol: String, k: Int, rows: Int)
@@ -353,34 +277,21 @@ object Dedup {
     * only (from `df`, which must cover every id in `cand`). Near-dup
     * candidates are a vanishing fraction of a 100 TB corpus —
     * recomputing beats carrying a shingle array per doc through the
-    * shuffle. */
+    * shuffle. `oneShot` follows [[Banded]]'s storage convention: a
+    * loop caller's verify pins nothing. */
   private def verifyJaccard(cand0: DataFrame, df: DataFrame, idCol: String,
       textCol: String, threshold: Double,
       oneShot: Boolean = true): DataFrame = {
-    // r18 (guide §1.2/§5, the q85 plan-weight item): the candidate pair
-    // table is referenced THREE times below (both candIds legs + the
-    // pair join), so the whole collision-join subtree above it used to
-    // re-expand per reference — for q85 that meant the probe's
-    // batch-band/size/broadcast pipeline planned ~3x over, and at sf0.1
-    // q85's cost is exactly that planning + per-reference broadcast
-    // builds (JobProbe). One eager lineage cut (id pairs only — a
-    // vanishing fraction of the corpus) makes every reference a
-    // LogicalRDD scan. Loop callers (IngestStream via incrementalPairs'
-    // reuseBands) skip it: a cut per micro-batch would pin one
-    // checkpoint RDD per batch — the documented per-batch-leak posture.
+    // referenced three times below: one eager cut (id pairs only) makes
+    // each reference a scan, not a re-planned collision-join subtree
     val cand = if (oneShot) cut(cand0) else cand0
     val candIds = cand.select(col("ida").as(idCol))
       .union(cand.select(col("idb").as(idCol))).distinct()
-    // cache() the candidate shingle sets: the pair join below references
-    // them TWICE (sa/sb), and only the exchanges beneath the candIds
-    // join are reusable — the join + tokenize/shingle projection above
-    // them re-ran once per side, i.e. the candidate docs were shingled
-    // twice (guide §1.2). Candidates are a vanishing fraction of the
-    // corpus, so the cache is small; MEMORY_AND_DISK (cache default)
-    // spills rather than OOMs, and callers reclaim via clearCache as
-    // with [[minhashPairs]]'s signature cache.
-    val sets = withShingles(df.join(candIds, idCol), textCol)
-      .select(col(idCol), col("shset")).cache()
+    // read twice (sa/sb): cached, candidate docs are shingled once;
+    // callers reclaim it like [[minhashPairs]]'s cache
+    val sets0 = withShingles(df.join(candIds, idCol), textCol)
+      .select(col(idCol), col("shset"))
+    val sets = if (oneShot) sets0.cache() else sets0
     val sa = sets.select(col(idCol).as("ida"), col("shset").as("seta"))
     val sb = sets.select(col(idCol).as("idb"), col("shset").as("setb"))
     cand.join(sa, "ida").join(sb, "idb")
@@ -393,75 +304,18 @@ object Dedup {
   }
 
   /** Persist a corpus's minhash band table BUCKETED on the band key —
-    * the "index build" half of incremental dedup. Pay the corpus
-    * shuffle once at write time; every later batch probes it with zero
-    * corpus-side exchange ([[incrementalPairs]]). The banding used
-    * (defaults adaptive — [[resolveMinhash]]) is RECORDED in a one-row
-    * `${table}_banding` metadata table and probes read it back, so a
-    * probe can never silently band differently from its index (band
-    * keys from mismatched parameters join silently but match nothing
-    * meaningful). */
+    * the "index build" half of incremental dedup ([[Banded.writeIndex]]:
+    * crash-ordered, with `_banding` and `_sizes` side tables). Pay the
+    * corpus shuffle once at write time; every later batch probes it with
+    * zero corpus-side exchange ([[incrementalPairs]]). The banding
+    * (defaults adaptive) is recorded, so a probe never silently bands
+    * differently from its index. */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       table: String, k: Int = AdaptiveMinhash, rows: Int = AdaptiveMinhash,
       nBuckets: Int = 32): Unit = {
     val (kk, rr) = resolveMinhash(df, k, rows)
-    // cache(): the sizes write and the bucketed band write below are
-    // two separate actions over this table — uncached, EACH re-ran the
-    // full corpus tokenize+minhash scan (guide §1.2). The cached rows
-    // are (id, bi, bv) only (~50 B/row), MEMORY_AND_DISK, and released
-    // as soon as both writes land.
-    val bands = bandTable(df, idCol, textCol, kk, rr).cache()
-    // `${table}_sizes` holds per-(bi, bv) posting-count PARTIALS:
-    // readers SUM per key, so index growers (IngestStream / q193's
-    // accumulator) append their batch's partial counts next to the
-    // band append and the sizes stay exact without rewriting. Rebuild
-    // order: drop the old bands FIRST, then sizes, then new bands — a
-    // crash anywhere leaves missing-bands (probe fails loudly), never
-    // NEW sizes beside OLD bands (silent over-cap truncation skew) nor
-    // bands-without-sizes. writeBandIndex + the append-partials
-    // convention are the ONLY supported writers.
-    graft.sources.Tables.dropTable(df.sparkSession, table)
-    graft.sources.Tables.writeTable(
-      df.sparkSession.range(1)
-        .select(lit(kk).as("k"), lit(rr).as("rows")),
-      s"${table}_banding")
-    graft.sources.Tables.writeTable(bandSizes(bands), s"${table}_sizes")
-    graft.sources.Tables.writeBucketed(bands, table, Seq("bi", "bv"),
-      nBuckets)
-    bands.unpersist(blocking = false)
-    ()
-  }
-
-  /** The (k, rows) a [[writeBandIndex]]-persisted index was built
-    * with, from its `_banding` metadata; explicit values must MATCH
-    * the recorded banding (fail loud beats band keys that join but
-    * match nothing). A pre-metadata index probed ADAPTIVELY fails
-    * loudly too (VERDICT r14 #2): guessing the historical (8, 2)
-    * default would silently join nothing against an index built with
-    * any other banding — rebuild via [[writeBandIndex]] (which records
-    * the metadata) or pass the explicit banding it was built with. */
-  private def indexBanding(spark: org.apache.spark.sql.SparkSession,
-      table: String, k: Int, rows: Int): (Int, Int) = {
-    val recorded =
-      try {
-        val r = spark.table(s"${table}_banding").head()
-        Some((r.getInt(0), r.getInt(1)))
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    (recorded, k == AdaptiveMinhash) match {
-      case (Some((rk, rr)), true) => (rk, rr)
-      case (Some((rk, rr)), false) =>
-        require(rk == k && rr == rows,
-          s"probe banding (k=$k, rows=$rows) != index $table's recorded " +
-            s"banding (k=$rk, rows=$rr) — band keys would join but match " +
-            "nothing meaningful")
-        (rk, rr)
-      case (None, true) => throw new IllegalArgumentException(
-        s"index $table has no ${table}_banding metadata and the probe " +
-          "asked for ADAPTIVE banding — the build-time (k, rows) cannot " +
-          s"be inferred. Rebuild the index via writeBandIndex (records " +
-          "the metadata) or pass the explicit (k, rows) it was built with")
-      case (None, false) => (k, rows)
-    }
+    Banded.writeIndex(bandTable(df, idCol, textCol, kk, rr), bandLayout(idCol),
+      table, nBuckets, Some((Banding, (kk, rr))))
   }
 
   /** Incremental near-dup dedup: pairs touching a NEW batch, against a
@@ -469,133 +323,28 @@ object Dedup {
     * production pipeline runs (the one-shot [[minhashPairs]] recomputes
     * the whole corpus every time).
     *
-    * Candidates = batch bands equi-joined against the persisted band
-    * table (bucketed on the join key, so the CORPUS side needs no
-    * exchange: Catalyst broadcasts a small batch, or aligns the batch
-    * shuffle to the corpus buckets — either way only the batch moves)
-    * plus the batch's within-batch band self-join. Exact-Jaccard
-    * verification on candidates only, reading texts from
-    * `verifySource` (must cover corpus + batch ids). Result = exactly
-    * [[minhashPairs]] over (corpus ∪ batch) restricted to pairs with
-    * at least one batch member. */
-  /** `reuseBands`: pass a caller-materialized [[bandTable]] of the
-    * batch to control its storage lifecycle (unpersist after the
-    * result is consumed) and share it with other per-batch work — the
-    * default computes and cache()s one internally, which outlives the
-    * call like [[minhashPairs]]'s signature cache (documented
-    * caller-reclaim contract); a long-lived loop calling this per
-    * batch MUST pass its own. */
+    * Candidates come from [[Banded.probe]] (only the batch moves), then
+    * exact-Jaccard verification reading texts from `verifySource` (must
+    * cover corpus + batch ids). Result = exactly [[minhashPairs]] over
+    * (corpus ∪ batch) restricted to pairs with at least one batch
+    * member, for disjoint batches. The probe bands as the index did:
+    * the recorded banding is read back and any explicit k/rows are
+    * cross-checked against it. `batchBands`: a caller-owned
+    * [[bandTable]] of the batch ([[Banded]]'s storage convention); a
+    * long-lived loop calling this per batch must pass one. */
   def incrementalPairs(batch: DataFrame, bandIndexTable: String,
       verifySource: DataFrame, idCol: String, textCol: String,
       k: Int = AdaptiveMinhash, rows: Int = AdaptiveMinhash,
       threshold: Double = 0.5,
-      reuseBands: Option[DataFrame] = None,
+      batchBands: Option[DataFrame] = None,
       bucketCap: Int = BucketCap.DefaultCap): DataFrame = {
-    val spark = batch.sparkSession
-    // the probe MUST band exactly as the index did: read the recorded
-    // banding (cross-checking any explicit values) rather than
-    // trusting the caller to repeat the build-time choice. A caller
-    // passing reuseBands asserts ITS banding through k/rows too.
-    val (kk, rr) = indexBanding(spark, bandIndexTable, k, rows)
-    val corpusBands = spark.table(bandIndexTable)
-    // batch bands: computed once, tiny relative to the corpus
-    val batchBands = reuseBands.getOrElse(
-      bandTable(batch, idCol, textCol, kk, rr).cache())
-    // Union (corpus + batch) bucket sizes, but ONLY for batch-touched
-    // buckets — untouched buckets can't produce a batch-touching pair,
-    // and restricting keeps the size table batch-sized (so it
-    // broadcasts; md5 band values make the corpus-wide size table
-    // O(N), see bandSizes). Corpus counts come from the persisted
-    // `_sizes` partials (summed per key — one columnar scan of the
-    // tiny side table per batch, never an O(corpus-index) re-scan);
-    // pre-r10 indexes without the side table fall back to one
-    // recompute over the index, restricted to touched keys.
-    val batchSizes = bandSizes(batchBands)
-      .withColumnRenamed("graft_bsz", "graft_nsz")
-    val touched = batchSizes.select("bi", "bv")
-    // The broadcast hints below are GATED on measured band-key volume:
-    // "batch-sized" is O(nBands x |batch|) distinct (bi, bv) keys —
-    // md5 band values, so a bulk-ingest batch in the millions would
-    // push a forced broadcast past the driver's memory. The count is
-    // ~free (it materializes the cache the probe joins need anyway);
-    // past the limit the same joins run as plain shuffles on the band
-    // key — identical results, just no longer exchange-free on the
-    // corpus side.
-    val smallBatch = batchBands.count() <= MaxBroadcastBandKeys
-    def hinted(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
-    val corpusSizes =
-      (try spark.table(s"${bandIndexTable}_sizes")
-       catch {
-         case _: org.apache.spark.sql.AnalysisException =>
-           bandSizes(corpusBands)
-       })
-        .join(hinted(touched), Seq("bi", "bv"), "left_semi")
-        .groupBy("bi", "bv").agg(sum("graft_bsz").as("graft_csz"))
-    // cache() (one-shot callers only): the union size table is
-    // referenced by BOTH truncated sides and each side twice again
-    // downstream — uncached, the final probe plan re-expanded this
-    // subtree ~13 times (15 scans of `_sizes` + as many broadcast
-    // builds in plans/r17/q85_incremental_dedup_before.txt), and at
-    // sf0.1 q85's cost is exactly that driver-side planning, not task
-    // time (JobProbe): measured 4.78 → 3.70 s. The table is
-    // batch-sized by construction (batch-touched keys only);
-    // MEMORY_AND_DISK, caller-reclaimed via clearCache like
-    // [[minhashPairs]]' signature cache (guide §1.2 / §5: don't
-    // compute — or plan — the same thing many times). Loop callers
-    // (q193 / IngestStream, signalled by `reuseBands`) skip the
-    // internal cache: they manage per-batch storage themselves and a
-    // handle-less cache would accumulate one entry per micro-batch —
-    // exactly the per-batch leak IngestStream.processBatch documents
-    // itself to be free of.
-    val unionSizesPlan = batchSizes
-      .join(corpusSizes, Seq("bi", "bv"), "left_outer")
-      .select(col("bi"), col("bv"),
-        (col("graft_nsz") + coalesce(col("graft_csz"), lit(0L)))
-          .as("graft_bsz"))
-    // r18: the one-shot cache() became an eager lineage CUT — the r17
-    // cache stopped recomputation, but every one of the ~13 downstream
-    // references still PRINTED and PLANNED the full cached subtree
-    // (InMemoryRelation carries its child plan), leaving q85's probe
-    // plan at 1,797 lines / 17 `_sizes` scans and its cost in planning
-    // + per-reference broadcast builds (JobProbe). A localCheckpoint is
-    // the same batch-sized materialization with the subtree replaced by
-    // a LogicalRDD everywhere. Same loop-caller carve-out as before
-    // (reuseBands => no internal storage pinned per micro-batch).
-    val unionSizes = hinted(
-      if (reuseBands.isEmpty) cut(unionSizesPlan) else unionSizesPlan)
-    val truncCorpus =
-      truncateBandsWith(corpusBands, unionSizes, idCol, bucketCap)
-    // truncBatch is referenced twice (vsCorpus' second leg + vsBatch) —
-    // cut it too on the one-shot path; batch-sized by construction.
-    val truncBatch0 =
-      truncateBandsWith(batchBands, unionSizes, idCol, bucketCap)
-    val truncBatch =
-      if (reuseBands.isEmpty) cut(truncBatch0) else truncBatch0
-    // The one-shot law's x<y join truncates the LARGER-id side, so a
-    // pair survives iff its larger id is a representative — the
-    // corpus-vs-batch candidates split by id order (corpus-larger
-    // probes the truncated corpus, batch-larger probes the truncated
-    // batch), each an equi-join the bucketed corpus table never
-    // exchanges for (the truncated sides carry broadcast-size
-    // filters). x<y also keeps the replay guard: a replayed batch
-    // already present in the index can't emit jac=1 self-pairs that
-    // would make admitBatch silently drop the whole replay.
-    val vsCorpus = batchBands.as("x").join(truncCorpus.as("y"),
-        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-      .unionAll(corpusBands.as("x").join(truncBatch.as("y"),
-          col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col(s"x.$idCol") < col(s"y.$idCol"))
-        .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb")))
-    val vsBatch = batchBands.as("x").join(truncBatch.as("y"),
-        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-    val cand = vsCorpus.union(vsBatch).distinct()
+    val (kk, rr) = Banded.recorded(batch.sparkSession, bandIndexTable,
+      Banding, k, rows)
+    val cand = Banded.probe(bandIndexTable, batchBands,
+      bandTable(batch, idCol, textCol, kk, rr), bandLayout(idCol), bucketCap)
+      .distinct()
     verifyJaccard(cand, verifySource, idCol, textCol, threshold,
-      oneShot = reuseBands.isEmpty)
+      oneShot = batchBands.isEmpty)
   }
 
   /** LSH band-configuration tuning audit: for each candidate (bands ×
@@ -609,11 +358,10 @@ object Dedup {
     *   - ground truth comes from [[prefixJaccardPairs]] — the
     *     exact-RECALL prefix-filter join, so no all-pairs scan exists
     *     even inside the audit;
-    *   - per config, candidates are the same band equi-join
-    *     [[minhashPairs]] runs — INCLUDING its [[truncateBands]]
-    *     collision-side cap, so the audit measures the candidate
-    *     volume the production operator would actually generate (and
-    *     the audit's own self-join inherits the linear bound).
+    *   - per config, candidates are the same capped band equi-join
+    *     [[minhashPairs]] runs ([[Banded.pairs]]), so the audit
+    *     measures the candidate volume the production operator would
+    *     actually generate (and inherits its linear bound).
     * Output: one row per config — n_bands, band_rows, n_cand, n_truth,
     * n_hit, recall_ppm, prec_ppm (exact integer ppm). The three
     * one-row aggregates combine via 1-row broadcast joins (benign
@@ -630,13 +378,8 @@ object Dedup {
     val sig = sample.select(col(idCol),
       expr(s"graft_minhash($textCol, $k)").as("_sig"))
     rowConfigs.map { r =>
-      val bands = bandsOf(sig, idCol, k, r)
-      val cand = bands.as("x")
-        .join(truncateBands(bands, idCol, bucketCap).as("y"),
-          col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col(s"x.$idCol") < col(s"y.$idCol"))
-        .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-        .distinct()
+      val cand = Banded.pairs(bandsOf(sig, idCol, k, r), bandLayout(idCol),
+        bucketCap)
       val candN = cand.agg(count(lit(1)).as("n_cand"))
       val hitN = cand.join(truth, Seq("ida", "idb"))
         .agg(count(lit(1)).as("n_hit"))
@@ -733,33 +476,29 @@ object Dedup {
   /** SimHash near-duplicate pairs within Hamming distance `maxHamming`
     * (must be < 4 for exactness): a 60-bit fingerprint splits into 4
     * 15-bit chunks, and by pigeonhole any pair within Hamming 3 shares
-    * at least one exact chunk — so candidates come from a chunk
-    * equi-join and only candidates pay the exact bit_count(xor)
-    * verification. Chunk width is the scale lever: 15-bit chunks give
-    * 4x32768 join buckets, so random collisions are ~N²/131072 rather
-    * than the near-all-pairs an 8-bit chunking would produce — and the
-    * signature is cached (16 B/doc) so its three plan references don't
-    * re-tokenize the corpus. */
+    * at least one exact chunk — so candidates come from the [[Banded]]
+    * chunk equi-join (uncapped: recall is exact) and only candidates
+    * pay the bit_count(xor) verification, row-local on chunk rows that
+    * carry the fingerprint. Chunk width is the scale lever: 15-bit
+    * chunks give 4x32768 join buckets, so random collisions are
+    * ~N²/131072 rather than the near-all-pairs an 8-bit chunking would
+    * produce — and the chunk table is cached (4 × ~24 B/doc) so its
+    * plan references don't re-tokenize the corpus. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4,
       "4 chunks only guarantee recall for Hamming <= 3")
-    val sh = simhashWide(df, idCol, textCol, bits = 60).cache()
-    val chunks = sh.select(col(idCol),
-      posexplode(expr(
+    val chunks = simhashWide(df, idCol, textCol, bits = 60)
+      .select(col(idCol), col("simhash"), posexplode(expr(
         "transform(sequence(0, 3), c -> shiftright(simhash, c * 15) & 32767)"))
         .as(Seq("ci", "cv")))
-    val cand = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-      .distinct()
-    val a = sh.select(col(idCol).as("ida"), col("simhash").as("sha"))
-    val b = sh.select(col(idCol).as("idb"), col("simhash").as("shb"))
-    cand.join(a, "ida").join(b, "idb")
-      .withColumn("hamming", expr("CAST(bit_count(sha ^ shb) AS INT)"))
+      .cache()
+    Banded.selfJoin(chunks,
+        Banded.Layout(Seq("ci", "cv"), idCol, Some(4L << 15)), Banded.Uncapped)
+      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"),
+        expr("CAST(bit_count(x.simhash ^ y.simhash) AS INT)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("ida", "idb", "hamming")
+      .distinct()
   }
 
   /** The admission decision an ingest pipeline actually outputs: keep

@@ -545,23 +545,10 @@ object Multimodal {
     }
   }
 
-  /** NEAR-duplicate image pairs within Hamming distance `maxHamming`
-    * over the 64-bit [[aHash]] — the Hamming-ball extension of q165's
-    * exact-match clusters, catching re-encodes/minor edits whose hashes
-    * differ in a few bits. Same chunk-pigeonhole as the 60-bit simhash
-    * pairs ([[Dedup.simhashPairs]]): the 64 bits split into 4 exact
-    * 16-bit chunks, and any pair within Hamming 3 differs in at most 3
-    * chunks, so it SHARES at least one — candidates come from a
-    * (chunk_idx, chunk_value) equi-join (4×65536 buckets; random
-    * collisions ~N²/262144, never all-pairs) and only candidates pay
-    * the exact popcount verification. Exact recall at maxHamming ≤ 3 by
-    * pigeonhole — the DuckDB oracle is the brute-force all-pairs join,
-    * so the gate proves it. The 16 B/doc hash table is cached: decode
-    * runs once, not once per plan reference. */
   /** Denormalized aHash chunk table: one row per (doc, chunk) carrying
     * the full 64-bit hash alongside — 4 rows × ~32 B per image, so the
     * Hamming verify after a chunk collision is ROW-LOCAL (no second
-    * join back to a hash table). */
+    * join back to a hash table). The image family's band table. */
   def aHashChunkTable(hashes: DataFrame): DataFrame =
     hashes.select(col("doc_id"), col("ahash_hi"), col("ahash_lo"),
       posexplode(expr(
@@ -569,71 +556,76 @@ object Multimodal {
           "ahash_hi & 65535, shiftright(ahash_hi, 16) & 65535)"))
         .as(Seq("ci", "cv")))
 
-  /** Persist the corpus aHash chunk index BUCKETED on the (ci, cv)
-    * join key — the image twin of [[Dedup.writeBandIndex]]: pay the
-    * corpus shuffle once at write time; every later batch probes with
-    * zero corpus-side exchange ([[incrementalAHashPairs]]). */
-  def writeAHashIndex(hashes: DataFrame, table: String,
-      nBuckets: Int = 32): Unit =
-    graft.sources.Tables.writeBucketed(
-      aHashChunkTable(hashes), table, Seq("ci", "cv"), nBuckets)
+  /** The chunk table's [[Banded.Layout]]: 4 × 2^16 (ci, cv) buckets. */
+  private val chunkLayout =
+    Banded.Layout(Seq("ci", "cv"), "doc_id", Some(4L << 16))
 
-  /** Incremental image near-dup pairs: pairs within Hamming `maxHamming`
-    * touching a NEW batch, probed against a [[writeAHashIndex]]-persisted
-    * corpus — the daily-ingest shape (the one-shot [[aHashPairs]]
-    * re-chunks the whole corpus every time). Candidates = batch chunks
-    * equi-joined against the bucketed index (only the batch moves) plus
-    * the batch's within-batch chunk self-join; the popcount verify is
-    * row-local thanks to the denormalized chunk rows, and the final
-    * distinct dedups multi-chunk agreements. Exact recall at
-    * maxHamming ≤ 3 by the same 4×16-bit pigeonhole as [[aHashPairs]] —
-    * the oracle brute-forces every batch-touching pair to prove it. */
-  def incrementalAHashPairs(batchHashes: DataFrame, indexTable: String,
-      maxHamming: Int = 3): DataFrame = {
+  /** The image family runs UNCAPPED: its recall contract is exact
+    * (pigeonhole), and chunk buckets at the gated scales already exceed
+    * [[BucketCap.DefaultCap]] (largest (ci, cv) bucket: 243 images at
+    * sf0.01, 2,378 at sf0.1), so a cap would drop true pairs there. */
+  private val ChunkCap = Banded.Uncapped
+
+  /** Row-local Hamming distance of a chunk collision's two hashes. */
+  private val hammingXY: Column =
+    expr("CAST(bit_count(x.ahash_hi ^ y.ahash_hi)" +
+      " + bit_count(x.ahash_lo ^ y.ahash_lo) AS INT)").as("hamming")
+
+  /** NEAR-duplicate image pairs within Hamming distance `maxHamming`
+    * over the 64-bit [[aHash]] — the Hamming-ball extension of q165's
+    * exact-match clusters, catching re-encodes/minor edits whose hashes
+    * differ in a few bits. Same chunk-pigeonhole as the 60-bit simhash
+    * pairs ([[Dedup.simhashPairs]]): the 64 bits split into 4 exact
+    * 16-bit chunks, and any pair within Hamming 3 differs in at most 3
+    * chunks, so it SHARES at least one — candidates come from the
+    * [[Banded]] (chunk_idx, chunk_value) equi-join and the popcount
+    * verify is row-local on the denormalized chunk rows. Exact recall at
+    * maxHamming ≤ 3 (the DuckDB oracle is the brute-force all-pairs
+    * join), with no bucket cap ([[ChunkCap]]): a chunk value shared by
+    * n images costs n² candidates. The chunk table is cached: decode
+    * runs once, not once per plan reference. */
+  def aHashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4,
       "4 chunks only guarantee recall for Hamming <= 3")
-    val spark = batchHashes.sparkSession
-    val corpus = spark.table(indexTable)
-    val batch = aHashChunkTable(batchHashes)
+    val chunks = aHashChunkTable(hashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pairsOf(other: DataFrame, cond: Column) =
-      batch.as("x").join(other.as("y"),
-          col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-            cond)
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("ida"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("idb"),
-          expr("CAST(bit_count(x.ahash_hi ^ y.ahash_hi)" +
-            " + bit_count(x.ahash_lo ^ y.ahash_lo) AS INT)").as("hamming"))
-    val vsCorpus = pairsOf(corpus, col("x.doc_id") =!= col("y.doc_id"))
-    val vsBatch = pairsOf(batch, col("x.doc_id") < col("y.doc_id"))
-    vsCorpus.union(vsBatch)
+    Banded.selfJoin(chunks, chunkLayout, ChunkCap)
+      .select(col("x.doc_id").as("ida"), col("y.doc_id").as("idb"),
+        hammingXY)
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
 
-  def aHashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+  /** Persist the corpus aHash chunk index BUCKETED on the (ci, cv)
+    * join key ([[Banded.writeIndex]]) — the image twin of
+    * [[Dedup.writeBandIndex]]: pay the corpus shuffle once at write
+    * time; every later batch probes with zero corpus-side exchange
+    * ([[incrementalAHashPairs]]). Uncapped, so no `_sizes` table. */
+  def writeAHashIndex(hashes: DataFrame, table: String,
+      nBuckets: Int = 32): Unit =
+    Banded.writeIndex(aHashChunkTable(hashes), chunkLayout, table,
+      nBuckets, banding = None, withSizes = false)
+
+  /** Incremental image near-dup pairs: pairs within Hamming `maxHamming`
+    * touching a NEW batch, probed against a [[writeAHashIndex]]-persisted
+    * corpus — the daily-ingest shape (the one-shot [[aHashPairs]]
+    * re-chunks the whole corpus every time). Candidates come from
+    * [[Banded.probe]] (only the batch moves); the popcount verify is
+    * row-local thanks to the denormalized chunk rows, and the final
+    * distinct dedups multi-chunk agreements. Exact recall at
+    * maxHamming ≤ 3 by the same 4×16-bit pigeonhole as [[aHashPairs]] —
+    * the oracle brute-forces every batch-touching pair to prove it.
+    * `batchBands`: a caller-owned [[aHashChunkTable]] of the batch
+    * ([[Banded]]'s storage convention). */
+  def incrementalAHashPairs(batchHashes: DataFrame, indexTable: String,
+      maxHamming: Int = 3,
+      batchBands: Option[DataFrame] = None): DataFrame = {
     require(maxHamming < 4,
       "4 chunks only guarantee recall for Hamming <= 3")
-    val h = hashes.select(col("doc_id"), col("ahash_hi"), col("ahash_lo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val chunks = h.select(col("doc_id"), posexplode(expr(
-      "array(ahash_lo & 65535, shiftright(ahash_lo, 16) & 65535, " +
-        "ahash_hi & 65535, shiftright(ahash_hi, 16) & 65535)"))
-      .as(Seq("ci", "cv")))
-    val cand = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("ida"), col("y.doc_id").as("idb"))
-      .distinct()
-    val a = h.select(col("doc_id").as("ida"), col("ahash_hi").as("hia"),
-      col("ahash_lo").as("loa"))
-    val b = h.select(col("doc_id").as("idb"), col("ahash_hi").as("hib"),
-      col("ahash_lo").as("lob"))
-    cand.join(a, "ida").join(b, "idb")
-      .withColumn("hamming",
-        expr("CAST(bit_count(hia ^ hib) + bit_count(loa ^ lob) AS INT)"))
+    Banded.probe(indexTable, batchBands, aHashChunkTable(batchHashes),
+        chunkLayout, ChunkCap, out = Seq(hammingXY))
       .filter(col("hamming") <= maxHamming)
-      .select("ida", "idb", "hamming")
+      .distinct()
   }
 
   private def stubResize(digest: java.security.MessageDigest, r: MediaRow,

@@ -45,14 +45,12 @@ object Similarity {
   /** vec table → (idCol, payload..., q: quantized, n2: squared norm).
     * [[Par.widen]]ed first: quantization + the LSH signatures computed
     * on top of `q` are the embedding family's per-row hot loop, and a
-    * bytes-sized scan plans far too few splits for it (r13 sf10: a
-    * 1-split embeddings scan serialized the whole family). r18: the
-    * widen floor is 0 HERE (text paths keep [[Par.DefaultWidenFloor]]):
-    * the embedding family makes few widen calls per query while its
-    * per-row cost dwarfs any gate-scale exchange — measured at sf0.1,
-    * the q135 collision-side broadcast ran as ONE 2.1 s task off the
-    * 0.8 MB 1-split embeddings scan; with the repair firing, q135
-    * 4.4/3.2 → 2.2/1.9 s warm reps (see Par.widen's r18 note). */
+    * bytes-sized scan plans far too few splits for it. The widen floor
+    * is 0 HERE (text paths keep [[Par.DefaultWidenFloor]]): the
+    * embedding family makes few widen calls per query while its per-row
+    * cost dwarfs any gate-scale exchange (sf0.1: q135's collision side
+    * otherwise ran as ONE 2.1 s task off the 1-split embeddings scan;
+    * widened, q135 4.4/3.2 → 2.2/1.9 s warm reps). */
   def prepare(df: DataFrame, embCol: String): DataFrame = {
     graft.functions.LongArrayDot.register(df.sparkSession)
     Par.widen(df, 0L).withColumn("q", quantized(embCol))
@@ -513,12 +511,13 @@ object Similarity {
     * OR-amplified buckets; candidates = pairs colliding in >=1 band;
     * exact cosine verify on candidates only. The equi-join on
     * (band, bucket) is the whole shuffle story — no all-pairs stage
-    * anywhere — and [[truncateBuckets]] caps the collision-side
+    * anywhere — and the [[Banded]] core caps the collision-side
     * posting list per bucket, so candidate volume is
     * `nBands × N × bucketCap` (linear in N) even when the hash is
-    * uninformative for a dense region. That cap is what lets the
-    * DEFAULT parameters run unblocked at 100 TB; tuning `bandBits`
-    * up (more, smaller buckets) remains the recall-preserving lever. */
+    * uninformative for a dense region. Recall is exact only for buckets
+    * at or under the cap. That cap is what lets the DEFAULT parameters
+    * run unblocked at 100 TB; tuning `bandBits` up (more, smaller
+    * buckets) remains the recall-preserving lever. */
   def lshDupPairs(df: DataFrame, idCol: String, embCol: String,
       threshold: Double, nBits: Int = AdaptiveBands,
       bandBits: Int = AdaptiveBands,
@@ -534,131 +533,70 @@ object Similarity {
   }
 
   /** Sentinel default for `nBits`/`bandBits`: resolve the banding from
-    * the corpus count at plan-build time ([[adaptiveBandBits]]) — the
-    * production posture since r14. The fixed 16/4 default's recall@3
-    * is a MEASURED ~0.00 one decade past the cap regime (SURVEY §6
-    * r13 recall table) while the adaptive banding holds the
-    * measured-good line, so shipping a compile-time constant would be
-    * a broken-at-scale operator with a green gate (VERDICT r13 #2).
-    * Pass explicit values to pin a banding (persisted-index probes
-    * must match their index — see the `_banding` metadata). */
-  val AdaptiveBands: Int = -1
+    * the corpus count at plan-build time ([[adaptiveBandBits]]). A fixed
+    * 16/4 banding's recall@3 falls to ~0.00 one decade past the cap
+    * regime (SURVEY §6 recall table) while the adaptive banding holds,
+    * so the default adapts. Pass explicit values to pin a banding
+    * (persisted-index probes must match their index — see the
+    * `_banding` metadata). */
+  val AdaptiveBands: Int = Banded.Adaptive
+
+  private val Banding = Banded.Params("nBits", "bandBits", "writeLshIndex")
+
+  /** The sign-bit band table's [[Banded.Layout]]: at most
+    * nBands·2^bandBits buckets, whatever the corpus size. */
+  private[graft] def bandLayout(idCol: String, nBits: Int, bandBits: Int)
+      : Banded.Layout =
+    Banded.Layout(Seq("band", "bucket"), idCol,
+      Some((nBits / bandBits).toLong << bandBits))
 
   /** Resolve an (nBits, bandBits) pair that may carry the
-    * [[AdaptiveBands]] sentinel. Adaptive resolution runs ONE narrow
-    * count job eagerly at plan-build time (callers composing lazy
-    * plans over streaming frames must pass explicit values — counting
-    * a stream is undefined, so this fails loudly; ADVICE r13). nBands
-    * stays 4, the measured sweet spot: recall is re-supplied by more
-    * hyperplanes per band, not more bands. */
+    * [[AdaptiveBands]] sentinel ([[Banded.resolve]]: one narrow count
+    * job eagerly at plan-build time; streaming frames must pass explicit
+    * values). nBands stays 4, the measured sweet spot: recall is
+    * re-supplied by more hyperplanes per band, not more bands. */
   private def resolveBanding(df: DataFrame, nBits: Int, bandBits: Int,
-      bucketCap: Int): (Int, Int) = {
-    if (bandBits != AdaptiveBands && nBits != AdaptiveBands)
-      return (nBits, bandBits)
-    require(bandBits == AdaptiveBands && nBits == AdaptiveBands,
-      s"pass BOTH nBits and bandBits or NEITHER (got nBits=$nBits, " +
-        s"bandBits=$bandBits) — a half-adaptive banding is undefined")
-    require(!df.isStreaming,
-      "adaptive banding resolves via an eager count, which a streaming " +
-        "frame cannot run — pass the explicit (nBits, bandBits) the " +
-        "persisted index or setup phase chose")
-    // memoized per corpus snapshot: one count job per session, not per
-    // operator call (VERDICT r14 #3) — see [[AdaptiveCount]]
-    val bb = adaptiveBandBits(AdaptiveCount.of(df), bucketCap)
-    (4 * bb, bb)
-  }
+      bucketCap: Int): (Int, Int) =
+    Banded.resolve(df, Banding, nBits, bandBits, { n =>
+      val bb = adaptiveBandBits(n, bucketCap)
+      (4 * bb, bb)
+    })
 
-  /** The capped collision side of an LSH self-join, broadcast-hinted
-    * whenever its CONSTRUCTIVE row bound — at most ~`cap` survivors per
-    * (band, bucket) × `nBands × 2^bandBits` buckets, CORPUS-SIZE
-    * INDEPENDENT — fits [[Dedup.MaxBroadcastBandKeys]]. Without the
-    * hint, Catalyst (whose estimate can't see the cap) plans a shuffle
-    * join on (band, bucket): at most `nBands × 2^bandBits` = 64
-    * distinct keys at the defaults, whose tiny exchanges AQE then
-    * coalesces to ~1 reducer — so the nBands × N × cap candidate
-    * explosion ran SINGLE-THREADED (r13 sf10 read: q135 33x, q205 24x
-    * for 10x data). Broadcasting keeps the explosion in the probe
-    * side's ([[Par.widen]]ed) partitioning — no (band, bucket) shuffle
-    * at all, at any corpus size. A finer banding (bandBits >= 8) blows
-    * the bound and falls back to the plain shuffle join — correct
-    * there on BOTH axes: its 2^bandBits-per-band key space distributes
-    * across every reducer (the 64-key collapse can't recur), and its
-    * collision rows carry ~520 B quantized arrays, so the would-be
-    * broadcast is hundreds of MB (measured: a 36/9 banding at sf10 ran
-    * 159 s with the broadcast forced vs 83 s for the default — the
-    * driver gather+rebroadcast ate the win). */
+  /** The capped collision side of an LSH join ([[Banded.truncate]]),
+    * broadcast-hinted whenever its CONSTRUCTIVE row bound — ~`cap`
+    * survivors × `nBands × 2^bandBits` buckets, corpus-size independent
+    * — fits [[MaxBroadcastCollisionRows]]. Without the hint, Catalyst
+    * (blind to the cap) plans a shuffle join on at most 64 distinct
+    * keys, which AQE coalesces to ~1 reducer: the candidate explosion
+    * would run single-threaded. A finer banding (bandBits >= 8) falls
+    * back to the shuffle join, which its key space distributes, and
+    * whose ~520 B-per-row broadcast would be hundreds of MB (sf10: a
+    * 36/9 banding ran 159 s broadcast vs 83 s shuffled). */
   private def collisionSide(banded: DataFrame, idCol: String, nBits: Int,
       bandBits: Int, bucketCap: Int): DataFrame = {
-    val truncated = truncateBuckets(banded, idCol, bucketCap)
-    // EXPECTED bound, not hard (ADVICE r13): BucketCap.keepSql is a
-    // modulo sampler whose survivors per bucket land in (cap/2, cap]
-    // in expectation but can exceed cap for adversarial id patterns,
-    // so the broadcast is forced only with a 2x safety factor between
-    // the expected bound and the row ceiling.
+    val truncated = Banded.truncate(banded, bandLayout(idCol, nBits, bandBits),
+      bucketCap)
+    // EXPECTED bound, not hard: BucketCap.keepSql is a modulo sampler
+    // whose survivors per bucket land in (cap/2, cap] in expectation but
+    // can exceed cap for adversarial id patterns, so the broadcast is
+    // forced only with a 2x safety factor between the expected bound
+    // and the row ceiling.
     val bound = (nBits / bandBits).toLong * (1L << bandBits) * bucketCap
     if (bound * 2 <= MaxBroadcastCollisionRows) broadcast(truncated)
     else truncated
   }
 
   /** Collision-side broadcast ceiling, in ROWS. Unlike
-    * [[Dedup.MaxBroadcastBandKeys]] (key-only rows, ~50 B each) the
+    * [[Banded.MaxBroadcastKeys]] (key-only rows, ~50 B each) the
     * scored collision side carries the quantized vector (~520 B at 64
     * dims), so 2^16 rows ≈ 35 MB — comfortably broadcastable — while
     * the default banding's 4 × 16 × 512 = 32k-row bound sits inside it
     * with 2× headroom. */
   val MaxBroadcastCollisionRows: Long = 1L << 16
 
-  /** Default collision-side posting cap for the LSH joins — see
-    * [[BucketCap.DefaultCap]]. The DuckDB oracles interpolate the same
-    * constant AND the same keep rule ([[BucketCap.keepDuck]]), so the
-    * two engines' truncation rules cannot drift. */
+  /** Default collision-side posting cap for the LSH joins — the shared
+    * [[BucketCap.DefaultCap]] the DuckDB oracles interpolate too. */
   val DefaultBucketCap: Int = BucketCap.DefaultCap
-
-  /** Bound a band table's per-(band,bucket) posting list to ~`cap`
-    * deterministic representatives: buckets at or under `cap` pass
-    * through UNTOUCHED (so the operator is the identity at gated
-    * scale), while a bucket of size n > cap keeps only members whose
-    * id-hash ≡ 0 (mod ⌈n/cap⌉) — the distribution-independent
-    * [[BucketCap]] rule, ~cap survivors for ANY id pattern, chosen by
-    * pure arithmetic both engines spell identically. Used on the
-    * COLLISION side of every
-    * LSH self-join: each row still probes with its own full band set
-    * (coverage keeps every row), but no row can meet more than ~cap
-    * collision partners per bucket, turning the worst-case candidate
-    * volume from Σ n_b² (quadratic in a dense bucket) into
-    * `nBands × N × cap` (linear in N).
-    *
-    * Deliberately WINDOW-FREE: a rank-per-bucket spelling would put a
-    * 10M-row degenerate bucket in one window task — the exact skew
-    * this cap exists to survive. Instead the only added work is a
-    * tiny (band, bucket, count) aggregate — ≤ nBands·2^bandBits rows —
-    * broadcast back for a row-local modulo filter. */
-  private[graft] def truncateBuckets(banded: DataFrame, idCol: String,
-      cap: Int): DataFrame =
-    truncateBucketsWith(banded,
-      banded.groupBy("band", "bucket").agg(count(lit(1)).as("graft_bsz")),
-      idCol, cap)
-
-  /** [[truncateBuckets]] against a CALLER-SUPPLIED size table
-    * `sizes(band, bucket, graft_bsz)` — the variant the incremental
-    * path uses so both of its collision sides truncate by the
-    * COMBINED (corpus + batch) bucket sizes: keep(id) depends only on
-    * (id, bucket size), so truncating each side by the union's sizes
-    * reproduces exactly the union-table truncation — which is what
-    * makes `incrementalLshPairs == lshDupPairs(corpus ∪ batch)
-    * restricted to batch-touching pairs` an EXACT law for DISJOINT
-    * batches (new ids — the admission workflow's regime, and the one
-    * the spec proves), capped or not. A REPLAYED batch double-counts
-    * its ids in the summed sizes, so its truncation can keep a
-    * different representative set than the one-shot over the deduped
-    * union; the x<y guards still forbid self-pairs, and because every
-    * emitted pair is exact-verified downstream, replay can only cost
-    * recall, never emit a wrong pair. */
-  private[graft] def truncateBucketsWith(banded: DataFrame,
-      sizes: DataFrame, idCol: String, cap: Int): DataFrame =
-    banded.join(broadcast(sizes), Seq("band", "bucket"))
-      .filter(expr(BucketCap.keepSql(s"`$idCol`", "graft_bsz", cap)))
-      .drop("graft_bsz")
 
   /** Approximate k-NN JOIN: every vector gets its top-`k` neighbors
     * from among its LSH band collisions — the all-rows companion to the
@@ -670,7 +608,7 @@ object Similarity {
     *
     * Scale shape: candidates come only from the (band, bucket)
     * equi-join — never an all-pairs stage, and the collision side is
-    * [[truncateBuckets]]-capped so volume is `nBands × N × bucketCap`
+    * [[Banded.truncate]]-capped so volume is `nBands × N × bucketCap`
     * (linear in N) — then one exact-cosine verify and one per-qid
     * window on the candidate set. Every row still queries with its
     * full band set, so coverage is unchanged by the cap. Vectors whose
@@ -681,13 +619,11 @@ object Similarity {
       nBits: Int = AdaptiveBands, bandBits: Int = AdaptiveBands,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
     val (nb, bb) = resolveBanding(df, nBits, bandBits, bucketCap)
-    val scored = scoredCandidates(df, idCol, embCol, nb, bb,
-      bucketCap, guard = _ =!= _, dedup = false)
-    rankScored(scored, k).withColumnRenamed("vid", "vec_id")
+    lshKnnJoinSeeded(df, idCol, embCol, k, nb, bb, bucketCap)
   }
 
   /** Scale-adaptive band width: `bandBits = clamp(ceil(log2(n / cap)),
-    * 4, 12)` — the measured recall lever (SURVEY §6 r13 table). The cap
+    * 4, 12)` — the measured recall lever (SURVEY §6 recall table). The cap
     * bounds WORK at any corpus size (volume ≤ nBands × N × cap), but
     * once buckets overfill, survivors become a shrinking random sample
     * of each bucket and recall decays (measured: the 4-bit default's
@@ -699,25 +635,17 @@ object Similarity {
     * collision-side broadcast bound intact (12 → 8.4M-row bound is the
     * documented fallback edge).
     *
-    * WHY NOT THE 12-BIT CEILING EVERYWHERE (r17 seeded study, VERDICT
-    * r16 #1+#3, receipt tools/receipts/r17/banding_study.txt): on the
-    * sandbox's NEAR-DUP corpora the ceiling seed-stably dominates the
-    * adaptive resolution on recall AND time (sf1: 1.000 vs 0.87–0.89
-    * across 3 disjoint hyperplane draws; truth neighbors agree on
-    * almost every hyperplane, so finer buckets only shed BucketCap
-    * truncation). But on a MARGINAL-COSINE corpus (planted neighbors
-    * at cos ≈ 0.70–0.80 — the natural-retrieval regime, generated by
-    * [[graft.tools.MarginalCorpus]]), the ordering seed-stably
-    * INVERTS: per-hyperplane agreement is only ~0.77, so a 12-bit
-    * band match costs 0.77¹² ≈ 0.04 and recall@3 falls monotonically
-    * with band width (0.23 at 6 bits → 0.12 at 12 bits, all 3 draws).
-    * A production default must not halve recall on natural corpora to
-    * win a near-dup benchmark, so the fill-targeted rule stands;
-    * callers that KNOW their corpus is near-dup (high-threshold dedup)
-    * pass an explicit finer banding — every public entry point takes
-    * (nBits, bandBits). Marginal-corpus recall is re-supplied by MORE
-    * BANDS (the OR side of the amplification), not finer ones — a
-    * cost-linear knob deliberately not spent by default. */
+    * Not the 12-bit ceiling everywhere (seeded study, receipt
+    * tools/receipts/r17/banding_study.txt): on near-dup corpora the
+    * ceiling wins on recall and time (sf1: 1.000 vs 0.87–0.89), but on
+    * a MARGINAL-COSINE corpus ([[graft.tools.MarginalCorpus]], planted
+    * neighbors at cos ≈ 0.70–0.80, per-hyperplane agreement ~0.77) a
+    * 12-bit band match costs 0.77¹² ≈ 0.04 and recall@3 falls with band
+    * width (0.23 at 6 bits → 0.12 at 12). The fill-targeted rule is the
+    * default; callers that KNOW their corpus is near-dup pass an
+    * explicit finer banding (every public entry point takes (nBits,
+    * bandBits)). Marginal-corpus recall is re-supplied by more bands or
+    * probes, not finer ones. */
   def adaptiveBandBits(n: Long, bucketCap: Int = DefaultBucketCap): Int = {
     require(n >= 0 && bucketCap >= 1)
     // desired bucket count per band: enough that expected fill <= cap
@@ -727,22 +655,9 @@ object Similarity {
     math.max(4, math.min(12, bits))
   }
 
-  /** [[lshKnnJoin]] with the banding chosen by [[adaptiveBandBits]]
-    * from the corpus count — since r14 this IS [[lshKnnJoin]]'s
-    * default behavior (one narrow count job runs eagerly at plan-build
-    * time; throws on streaming frames — see [[resolveBanding]]), kept
-    * as a named entry point because the q302 gate pins the equality
-    * adaptive == fixed-default inside the clamp region against q135's
-    * oracle. At the oracle-gate scales the [4, 12] clamp makes both
-    * IDENTICAL, while a 100 TB corpus gets the recall-preserving finer
-    * banding automatically. */
-  def lshKnnJoinAdaptive(df: DataFrame, idCol: String, embCol: String,
-      k: Int, bucketCap: Int = DefaultBucketCap): DataFrame =
-    lshKnnJoin(df, idCol, embCol, k, bucketCap = bucketCap)
-
   /** STUDY-ONLY [[lshKnnJoin]] with an explicit hyperplane-index offset
     * (see [[graft.functions.LshSigExpr]]): the seed-stability probes
-    * (VERDICT r16 #1) need INDEPENDENT hyperplane draws per banding to
+    * need INDEPENDENT hyperplane draws per banding to
     * tell a real recall ordering from a lucky draw, and the production
     * LCG is seedless by design (both engines spell it identically).
     * Offsets that are multiples of 64 give disjoint draws for
@@ -751,37 +666,28 @@ object Similarity {
   private[graft] def lshKnnJoinSeeded(df: DataFrame, idCol: String,
       embCol: String, k: Int, nBits: Int, bandBits: Int,
       bucketCap: Int = DefaultBucketCap, hpOffset: Int = 0): DataFrame = {
-    val scored = scoredCandidates(df, idCol, embCol, nBits, bandBits,
-      bucketCap, guard = _ =!= _, hpOffset = hpOffset, dedup = false)
-    rankScored(scored, k).withColumnRenamed("vid", "vec_id")
+    rankScored(scoredCandidates(df, idCol, embCol, nBits, bandBits,
+      bucketCap, guard = _ =!= _, hpOffset = hpOffset, dedup = false), k)
   }
 
   /** Hamming-1 MULTIPROBE [[lshKnnJoin]] (Lv et al., VLDB 2007 —
     * multi-probe LSH, here with the deterministic radius-1 probe set):
     * every query row probes its own (band, bucket) PLUS the `bandBits`
     * buckets one bit-flip away — `1 + bandBits` probes per band
-    * against the SAME capped collision side as [[lshKnnJoin]]. The
-    * recall/cost trade this buys at scale (and WHY it exists — the r17
-    * banding study, tools/receipts/r17/banding_study.txt): on a
-    * marginal-cosine corpus (neighbors at cos ≈ 0.75, per-hyperplane
-    * agreement p ≈ 0.77) a band matches with probability p^bandBits,
-    * and at n=200k NO banding choice rescued recall (banding-flat
-    * ≈ 0.06) — the lever there is MORE PROBES, not finer bands: the
-    * radius-1 ball also admits bands with exactly one disagreeing
-    * hyperplane, p^bb + bb·p^(bb−1)(1−p) ≈ 3.7× the per-band match
-    * rate at bb = 9. Crucially the INDEX does not change: the
-    * collision side keeps the identical banding, cap, truncation rule,
-    * and broadcast bound (a persisted band index serves both probe
-    * modes unchanged) — only probe-side work fans out, ×(bandBits+1)
-    * rows into the collision join, so candidate volume stays bounded
-    * by nBands × (bandBits+1) × N × cap. That asymmetry is the 100 TB
-    * story: recall is re-supplied per QUERY at probe time (spend it
-    * only for the queries that need it), not baked corpus-wide into a
-    * bigger index or a rebuilt banding. Output shape is [[lshKnnJoin]]
-    * 's (qid, vec_id, rank, cos); the candidate set is a SUPERSET of
-    * the single-probe candidates (probe 0 is the identity bucket), so
-    * per (qid, rank) the reported cosine dominates the single-probe
-    * one — spec-pinned. */
+    * against the SAME capped collision side as [[lshKnnJoin]]. On a
+    * marginal-cosine corpus (per-hyperplane agreement p ≈ 0.77) no
+    * banding choice rescues recall at n=200k (receipt
+    * tools/receipts/r17/banding_study.txt); the radius-1 ball also
+    * admits bands with one disagreeing hyperplane, p^bb +
+    * bb·p^(bb−1)(1−p) ≈ 3.7× the per-band match rate at bb = 9. The
+    * INDEX does not change (same banding, cap, truncation and
+    * broadcast bound); only probe-side work fans out ×(bandBits+1), so
+    * candidate volume stays bounded by nBands × (bandBits+1) × N × cap
+    * and recall is spent per QUERY at probe time. Output shape is
+    * [[lshKnnJoin]]'s (qid, vec_id, rank, cos); the candidate set is a
+    * SUPERSET of the single-probe candidates (probe 0 is the identity
+    * bucket), so per (qid, rank) the reported cosine dominates the
+    * single-probe one — spec-pinned. */
   def lshKnnJoinMultiprobe(df: DataFrame, idCol: String, embCol: String,
       k: Int, nBits: Int = AdaptiveBands, bandBits: Int = AdaptiveBands,
       bucketCap: Int = DefaultBucketCap): DataFrame =
@@ -797,7 +703,7 @@ object Similarity {
     val banded = bandedQ(df, idCol, embCol, nb, bb, Nil, hpOffset)
     val scored = scoreProbes(probeExplode(banded, bb), banded, idCol,
       nb, bb, bucketCap)
-    rankScored(scored, k).withColumnRenamed("vid", "vec_id")
+    rankScored(scored, k)
   }
 
   /** Radius-1 probe fan-out: the original bucket (probe 0) + one
@@ -812,18 +718,15 @@ object Similarity {
 
   /** Score a (possibly probe-exploded) banded probe side against the
     * capped collision side of `index` — the one collision-join
-    * spelling the multiprobe paths share with [[scoredCandidates]]. */
+    * spelling of every LSH path. Emits the raw multi-collision stream
+    * (qid, vid, cos): [[rankScored]]'s aggregate dedups while it ranks. */
   private def scoreProbes(probes: DataFrame, index: DataFrame,
-      idCol: String, nBits: Int, bandBits: Int, bucketCap: Int)
-      : DataFrame =
-    // raw multi-collision stream: [[rankScored]]'s fused aggregate
-    // dedups while it ranks (every consumer of this path ranks)
-    probes.as("x")
-      .join(collisionSide(index, idCol, nBits, bandBits, bucketCap)
-          .as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          col(s"x.$idCol") =!= col(s"y.$idCol"))
+      idCol: String, nBits: Int, bandBits: Int, bucketCap: Int,
+      guard: (Column, Column) => Column = _ =!= _,
+      extraFilter: Column = lit(true)): DataFrame =
+    Banded.collide(probes,
+        collisionSide(index, idCol, nBits, bandBits, bucketCap),
+        bandLayout(idCol, nBits, bandBits), guard, extraFilter)
       .select(col(s"x.$idCol").as("qid"), col(s"y.$idCol").as("vid"),
         cosine(expr("graft_dot(x.q, y.q)"),
           col("x.n2"), col("y.n2")).as("cos"))
@@ -845,16 +748,11 @@ object Similarity {
 
   /** [[lshKnnSearch]] with the Hamming-1 probe fan-out of
     * [[lshKnnJoinMultiprobe]]: ×(bandBits+1) probe rows PER QUERY,
-    * zero change to the corpus index. This is where multiprobe earns
-    * its keep at scale — the r17 margin-corpus receipts
-    * (tools/receipts/r17/): a radius-1 probe set lifts recall 2.4–5×
-    * in the regime where NO banding choice helps, and on the search
-    * path its cost is `|queries| × nBands × (bandBits+1) × cap`
-    * candidates — a per-query-batch spend, while the SELF-join
-    * multiprobe multiplies the whole corpus's candidate volume by
-    * (bandBits+1) (measured: 36/9 at n=200k ≈ 3.1B scored pairs,
-    * beyond a single box's spill disk — fine for a cluster, but the
-    * search path is the shape that needs no such caveat). */
+    * zero change to the corpus index: a radius-1 probe set lifts recall
+    * 2.4–5× where no banding choice helps (tools/receipts/r17/), at
+    * `|queries| × nBands × (bandBits+1) × cap` candidates — a
+    * per-query-batch spend, where the SELF-join multiprobe multiplies
+    * the whole corpus's candidate volume by (bandBits+1). */
   def lshKnnSearchMultiprobe(corpus: DataFrame, queries: DataFrame,
       idCol: String, embCol: String, k: Int, nBits: Int = AdaptiveBands,
       bandBits: Int = AdaptiveBands,
@@ -875,31 +773,25 @@ object Similarity {
     val probes =
       if (multiprobe) probeExplode(bandedQueries, bb) else bandedQueries
     val scored = scoreProbes(probes, bandedCorpus, idCol, nb, bb, bucketCap)
-    rankScored(scored, k).withColumnRenamed("vid", "vec_id")
+    rankScored(scored, k)
   }
 
   /** Rank pre-scored (qid, vid, cos) rows per qid (cos desc, id
-    * tiebreak), keep top-k — the tail of every LSH-candidate search.
+    * tiebreak), keep top-k as (qid, vec_id, rank, cos) — the tail of
+    * every LSH-candidate search.
     * Dedup aggregate (multi-band collisions score identically, so
     * max(cos) is exact dedup) + row_number window, both memory-ROBUST:
     * scalar hash-agg state and a spill-friendly radix sort.
     *
-    * r18: this DELIBERATELY reverts r17's fused single-exchange
-    * collect_set/sort_array/slice tail. That spelling assembles every
+    * Deliberately NOT a fused single-exchange
+    * collect_set/sort_array/slice tail: that spelling assembles every
     * qid's full candidate set (≤ nBands × (bandBits+1) × bucketCap
     * entries ≈ 100 KB at sf1 parameters) in the MAP-SIDE partial
     * aggregation buffer — per-task memory = (qids per task) × set
-    * size, which at sf1 / 32 concurrent tasks is a multi-GB object-agg
-    * map that collapses into a bimodal spill cascade: measured q302
-    * 50.9 s wall / 1,215 s task, q135 up to 118 s / 3,400 s task for
-    * work that costs ~110–170 s of task time in this spelling
-    * (tools/receipts/r18/, sf1 c32 suite runs) — 10–30× inflation,
-    * invisible at sf0.1 where sets are small. With the r18 widen
-    * repair in place this two-exchange tail is also equal-or-FASTER at
-    * gate scale (sf0.1: q135 2.42 vs 2.75, q205 1.45 vs 2.02, q199
-    * 3.62 vs 4.11; q302/q303 within noise the other way), so the fused
-    * tail kept no regime. Guide §1.1's rule applied: the "ideal"
-    * one-exchange plan lost to the measured one. Callers still feed
+    * size, a multi-GB object-agg map at sf1 / 32 concurrent tasks that
+    * collapses into a spill cascade (10–30× task-time inflation,
+    * tools/receipts/r18/), and it is no faster at gate scale. Callers
+    * still feed
     * the RAW scored stream (`dedup = false`) — the dedup happens here,
     * in a scalar two-phase HashAggregate whose partials combine
     * map-side and spill gracefully. */
@@ -908,18 +800,16 @@ object Similarity {
     scored.groupBy("qid", "vid").agg(max(col("cos")).as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select("qid", "vid", "rank", "cos")
+      .select(col("qid"), col("vid").as("vec_id"), col("rank"), col("cos"))
   }
 
   /** Band/bucket rows CARRYING the quantized vectors (and optional
     * ride-along columns): (idCol, q, n2, extra..., band, bucket). The
     * arrays ride the band explosion — a narrow, map-local ×nBands
-    * inflation — so the collision join can score candidates INLINE and
-    * only (qid, vid, cos) scalars ever reach a shuffle. The previous
-    * shape joined the vectors onto the CANDIDATE table instead, which
-    * at sf10 meant exchanging ~520 B of array payload per candidate
-    * row — a ~50× shuffle-volume multiplier on the nBands × N × cap
-    * candidate stream (the r13 sf10 read). */
+    * inflation — so the collision join scores candidates INLINE and
+    * only (qid, vid, cos) scalars ever reach a shuffle (joining vectors
+    * onto the candidate table instead multiplies shuffle volume ~50× at
+    * sf10). */
   private def bandedQ(df: DataFrame, idCol: String, embCol: String,
       nBits: Int, bandBits: Int, extra: Seq[String] = Nil,
       hpOffset: Int = 0): DataFrame = {
@@ -940,19 +830,14 @@ object Similarity {
         .stripMargin)).as(Seq("band", "bucket")): _*)
   }
 
-  /** Directed, INLINE-SCORED (qid, vid, cos) band-collision pairs — ONE
-    * spelling of the LSH candidate space for [[lshKnnJoin]] and
-    * [[hardNegatives]], so their semantics cannot drift apart. The vid
-    * side rides [[truncateBuckets]] (broadcast when its constructive
-    * bound allows — [[collisionSide]]); qid side is the full corpus.
-    * The exact cosine is computed IN the collision join (both vectors
-    * are row-local there), so the per-pair dedup and everything
-    * downstream shuffle 24-byte scalars, never array payloads. A pair
-    * colliding in several bands scores once per band — identical cos
-    * every time (pure function of the pair), so the per-pair MAX
-    * aggregate is exact dedup, not a tie-break (and, unlike
-    * dropDuplicates-with-payload, plans a plain two-level hash
-    * aggregate with map-side combine). */
+  /** Directed, INLINE-SCORED (qid, vid, cos) band-collision pairs of a
+    * corpus against its own capped collision side ([[scoreProbes]]) —
+    * ONE spelling of the LSH candidate space for [[lshDupPairs]],
+    * [[lshKnnJoin]] and [[hardNegatives]]. The exact cosine is computed
+    * IN the collision join, so everything downstream shuffles 24-byte
+    * scalars, never array payloads. A pair colliding in several bands
+    * scores the identical cos once per band, so the per-pair MAX
+    * aggregate is exact dedup (a plain two-level hash aggregate). */
   private def scoredCandidates(df: DataFrame, idCol: String, embCol: String,
       nBits: Int, bandBits: Int, bucketCap: Int,
       guard: (Column, Column) => Column,
@@ -960,14 +845,8 @@ object Similarity {
       hpOffset: Int = 0, dedup: Boolean = true)
       : DataFrame = {
     val banded = bandedQ(df, idCol, embCol, nBits, bandBits, extra, hpOffset)
-    val raw = banded.as("x")
-      .join(collisionSide(banded, idCol, nBits, bandBits, bucketCap).as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          guard(col(s"x.$idCol"), col(s"y.$idCol")) && extraFilter)
-      .select(col(s"x.$idCol").as("qid"), col(s"y.$idCol").as("vid"),
-        cosine(expr("graft_dot(x.q, y.q)"),
-          col("x.n2"), col("y.n2")).as("cos"))
+    val raw = scoreProbes(banded, banded, idCol, nBits, bandBits,
+      bucketCap, guard, extraFilter)
     // `dedup = false` hands the raw multi-collision stream to
     // [[rankScored]], whose single fused aggregate dedups while it
     // ranks — pair-set consumers ([[lshDupPairs]]) keep the exact
@@ -1057,14 +936,11 @@ object Similarity {
       nBits: Int = AdaptiveBands, bandBits: Int = AdaptiveBands,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
     val (nb, bb) = resolveBanding(df, nBits, bandBits, bucketCap)
-    // the label rides the banded sides (an extra column on the band
-    // explosion, not a join), so same-label pairs drop INSIDE the
-    // collision join — positives neither score, shuffle, nor rank
     val scored = scoredCandidates(df, idCol, embCol, nb, bb,
       bucketCap, guard = _ =!= _,
       extraFilter = col(s"x.$labelCol") =!= col(s"y.$labelCol"),
       extra = Seq(labelCol), dedup = false)
-    rankScored(scored, k).withColumnRenamed("vid", "vec_id")
+    rankScored(scored, k)
   }
 
   /** Shared tail of every candidate-based search: exact-cosine score
@@ -1094,13 +970,9 @@ object Similarity {
     * [[writeLshIndex]] persists and [[incrementalLshPairs]] probes. */
   def lshBands(df: DataFrame, idCol: String, embCol: String,
       nBits: Int = 16, bandBits: Int = 4): DataFrame =
-    // graft_lshsig = the fused native loop for the declarative
-    // transform∘aggregate spelling (kept in specs for parity via
-    // hyperplaneWeight); it also enforces the dim <= 128 weight-stride
-    // guard per ROW inside the plan — no extra job at plan-build time,
-    // and mixed-dim frames can't slip one oversized row past a sampled
-    // check. ONE banding spelling ([[bandedQ]]) serves both this
-    // persisted-index shape and the inline-scored self-joins.
+    // ONE banding spelling ([[bandedQ]]: graft_lshsig, which enforces
+    // the dim <= 128 weight-stride guard per ROW) serves both this
+    // persisted-index shape and the inline-scored self-joins
     bandedQ(df, idCol, embCol, nBits, bandBits)
       .select(col(idCol), col("band"), col("bucket"))
 
@@ -1118,165 +990,48 @@ object Similarity {
   }
 
   /** Persist a corpus's LSH band table BUCKETED on the band key — the
-    * embedding-side analog of Dedup.writeBandIndex: pay the corpus
-    * shuffle once, probe it per batch with zero corpus-side exchange.
-    * The banding used (defaults adaptive — [[resolveBanding]]) is
-    * RECORDED in a one-row `${table}_banding` metadata table, and
-    * [[incrementalLshPairs]] probes read it back — so a probe can
-    * never silently band differently from its index (mismatched
-    * parameters produce band keys that join but mean nothing;
-    * VERDICT r13 optional 9). */
+    * embedding twin of Dedup.writeBandIndex ([[Banded.writeIndex]]:
+    * crash-ordered, with `_banding` and `_sizes` side tables): pay the
+    * corpus shuffle once, probe it per batch with zero corpus-side
+    * exchange. The banding (defaults adaptive) is recorded, and
+    * [[incrementalLshPairs]] reads it back — so a probe never silently
+    * bands differently from its index. */
   def writeLshIndex(df: DataFrame, idCol: String, embCol: String,
       table: String, nBits: Int = AdaptiveBands,
       bandBits: Int = AdaptiveBands,
       nBuckets: Int = 32): Unit = {
     val (nb, bb) = resolveBanding(df, nBits, bandBits, DefaultBucketCap)
-    // cache(): the sizes write and the bucketed band write below are
-    // two separate actions — uncached, each re-ran the full corpus
-    // prepare + LSH-signature scan (same fix as Dedup.writeBandIndex;
-    // guide §1.2). Released as soon as both writes land.
-    val bands = lshBands(df, idCol, embCol, nb, bb).cache()
-    // bucket-size side table (≤ nBands·2^bandBits rows): lets the
-    // incremental probe truncate against COMBINED corpus+batch sizes
-    // without re-scanning the corpus index per batch. Write order on a
-    // REBUILD: drop the old bands FIRST, then sizes, then new bands —
-    // a crash anywhere in the sequence leaves missing-bands (the probe
-    // fails loudly) and never new-sizes-beside-OLD-bands (a silent
-    // sizes/bands mismatch skewing over-cap truncation) nor
-    // bands-without-sizes (a silent per-batch corpus re-aggregation
-    // fallback). writeLshIndex is the ONLY supported writer of
-    // `table` — rewriting the bands by any other path leaves
-    // `${table}_sizes` stale and voids the incremental/one-shot law.
-    graft.sources.Tables.dropTable(df.sparkSession, table)
-    graft.sources.Tables.writeTable(
-      df.sparkSession.range(1)
-        .select(lit(nb).as("nbits"), lit(bb).as("bandbits")),
-      s"${table}_banding")
-    graft.sources.Tables.writeTable(
-      bands.groupBy("band", "bucket").agg(count(lit(1)).as("graft_bsz")),
-      s"${table}_sizes")
-    graft.sources.Tables.writeBucketed(bands, table,
-      Seq("band", "bucket"), nBuckets)
-    bands.unpersist(blocking = false)
-    ()
-  }
-
-  /** The (nBits, bandBits) a [[writeLshIndex]]-persisted index was
-    * built with, from its `_banding` metadata table. `explicit`
-    * values, when given, must MATCH the recorded banding — failing
-    * loudly beats a probe whose band keys join but mean nothing. A
-    * pre-metadata index probed ADAPTIVELY also fails loudly (VERDICT
-    * r14 #2): guessing the historical 16/4 default would silently join
-    * nothing against an index built with any other banding — rebuild
-    * via [[writeLshIndex]] or pass the build-time explicit values. */
-  private def indexBanding(spark: org.apache.spark.sql.SparkSession,
-      table: String, nBits: Int, bandBits: Int): (Int, Int) = {
-    val recorded =
-      try {
-        val r = spark.table(s"${table}_banding").head()
-        Some((r.getInt(0), r.getInt(1)))
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    (recorded, nBits == AdaptiveBands) match {
-      case (Some((rn, rb)), true) => (rn, rb)
-      case (Some((rn, rb)), false) =>
-        require(rn == nBits && rb == bandBits,
-          s"probe banding ($nBits/$bandBits) != index $table's recorded " +
-            s"banding ($rn/$rb) — band keys would join but mean nothing")
-        (rn, rb)
-      case (None, true) => throw new IllegalArgumentException(
-        s"index $table has no ${table}_banding metadata and the probe " +
-          "asked for ADAPTIVE banding — the build-time (nBits, bandBits) " +
-          "cannot be inferred. Rebuild the index via writeLshIndex " +
-          "(records the metadata) or pass the explicit banding it was " +
-          "built with")
-      case (None, false) => (nBits, bandBits)
-    }
+    Banded.writeIndex(lshBands(df, idCol, embCol, nb, bb),
+      bandLayout(idCol, nb, bb), table, nBuckets, Some((Banding, (nb, bb))))
   }
 
   /** Incremental embedding near-dup pairs touching a NEW batch, against
-    * a [[writeLshIndex]]-persisted corpus: batch bands equi-join the
-    * bucketed table (only the batch moves) plus the within-batch
-    * self-join; exact-cosine verify on candidates only. Result =
-    * exactly [[lshDupPairs]] over (corpus ∪ batch) restricted to pairs
-    * with at least one batch member. */
+    * a [[writeLshIndex]]-persisted corpus: [[Banded.probe]] candidates
+    * (only the batch moves), exact-cosine verify on candidates only.
+    * Result = exactly [[lshDupPairs]] over (corpus ∪ batch) restricted
+    * to pairs with at least one batch member, for disjoint batches.
+    *
+    * `unionSizesOverride`: when a batch streams as MICRO-batches, every
+    * probe must truncate under the same FINAL union sizes the one-shot
+    * recompute uses — the caller computes them once when the batch
+    * manifest lands ([[Banded.unionSizes]]) and passes them here;
+    * without them each micro-batch would truncate under its own smaller
+    * sizes and, wherever the cap binds, keep more rows than the one-shot
+    * cap. `batchBands`: a caller-owned [[lshBands]] table of the batch
+    * ([[Banded]]'s storage convention). */
   def incrementalLshPairs(batch: DataFrame, lshIndexTable: String,
       verifySource: DataFrame, idCol: String, embCol: String,
       threshold: Double, nBits: Int = AdaptiveBands,
       bandBits: Int = AdaptiveBands,
       bucketCap: Int = DefaultBucketCap,
-      unionSizesOverride: Option[DataFrame] = None): DataFrame = {
-    val spark = batch.sparkSession
-    // the probe MUST band exactly as the index did: read the recorded
-    // banding (and cross-check any explicit values against it) rather
-    // than trusting the caller to repeat the build-time choice
-    val (nb, bb) = indexBanding(spark, lshIndexTable, nBits, bandBits)
-    val corpusBands = spark.table(lshIndexTable)
-    val batchBands = lshBands(batch, idCol, embCol, nb, bb).cache()
-    // BOTH collision sides truncate by the COMBINED corpus+batch bucket
-    // sizes: keep(id) is a pure function of (id, bucket size), so
-    // per-side truncation under the union's sizes equals truncating the
-    // union table — the exact-equivalence law with
-    // lshDupPairs(corpus ∪ batch) survives the capped regime for
-    // DISJOINT batches (the admission workflow; see
-    // truncateBucketsWith's scaladoc for why a replayed batch is
-    // outside the law — recall-only degradation, never a wrong pair).
-    // Corpus sizes come from the side table
-    // [[writeLshIndex]] persists (pre-r9 indexes: recompute once) —
-    // the per-batch cost stays O(batch), never an O(corpus) re-scan.
-    // unionSizesOverride: when a batch streams as MICRO-batches, the
-    // exactness condition is that every probe truncates under the SAME
-    // final union sizes the one-shot recompute uses — the caller
-    // computes (corpus + whole-batch) sizes once when the batch
-    // manifest lands (a narrow band-count pass, before contents
-    // stream) and passes them here; without it each micro-batch would
-    // truncate under its own smaller sizes and, wherever the cap
-    // binds, keep MORE rows than the one-shot cap (q295's sf1 lesson:
-    // 16-value LSH buckets grow linearly with the corpus, so the cap
-    // genuinely binds one decade up).
-    val unionSizes = unionSizesOverride.getOrElse {
-      val corpusSizes =
-        (try spark.table(s"${lshIndexTable}_sizes")
-         catch {
-           case _: org.apache.spark.sql.AnalysisException =>
-             corpusBands.groupBy("band", "bucket")
-               .agg(count(lit(1)).as("graft_bsz"))
-         }).withColumnRenamed("graft_bsz", "graft_csz")
-      val batchSizes = batchBands.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("graft_nsz"))
-      corpusSizes
-        .join(batchSizes, Seq("band", "bucket"), "full_outer")
-        .select(col("band"), col("bucket"),
-          (coalesce(col("graft_csz"), lit(0L)) +
-            coalesce(col("graft_nsz"), lit(0L))).as("graft_bsz"))
-    }
-    val truncCorpus =
-      truncateBucketsWith(corpusBands, unionSizes, idCol, bucketCap)
-    val truncBatch =
-      truncateBucketsWith(batchBands, unionSizes, idCol, bucketCap)
-    // The one-shot law's x<y join always puts the LARGER id on the
-    // truncated side, so a pair survives iff its larger id is a
-    // representative — the corpus-vs-batch candidates therefore split
-    // by id order (corpus-larger probes the truncated corpus,
-    // batch-larger probes the truncated batch), each an equi-join the
-    // bucketed corpus table never moves for. x<y also guarantees a
-    // replayed batch already present in the index can't emit cos=1
-    // self-pairs.
-    val vsCorpus = batchBands.as("x").join(truncCorpus.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-      .unionAll(corpusBands.as("x").join(truncBatch.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bucket") === col("y.bucket") &&
-            col(s"x.$idCol") < col(s"y.$idCol"))
-        .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb")))
-    val vsBatch = batchBands.as("x").join(truncBatch.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"))
-    val cand = vsCorpus.union(vsBatch).dropDuplicates("ida", "idb")
+      unionSizesOverride: Option[DataFrame] = None,
+      batchBands: Option[DataFrame] = None): DataFrame = {
+    val (nb, bb) = Banded.recorded(batch.sparkSession, lshIndexTable,
+      Banding, nBits, bandBits)
+    val cand = Banded.probe(lshIndexTable, batchBands,
+        lshBands(batch, idCol, embCol, nb, bb), bandLayout(idCol, nb, bb),
+        bucketCap, unionSizesOverride)
+      .dropDuplicates("ida", "idb")
     verifyCosine(cand, verifySource, idCol, embCol, threshold)
   }
 
@@ -1298,13 +1053,10 @@ object Similarity {
   def semDedup(df: DataFrame, idCol: String, embCol: String,
       k: Int = AdaptiveBands,
       iters: Int = 2, threshold: Double = 0.35): DataFrame = {
-    // k = AdaptiveBands: scale the cluster count with the corpus so
-    // the per-cell quadratic stays bounded — the docstring's "k grows
-    // with the corpus" promise made real (the cluster index is this
-    // operator's banding; a compile-time k is the same
-    // broken-at-scale shape as a compile-time bandBits). One eager
-    // count at plan-build time, like resolveBanding — memoized per
-    // corpus snapshot ([[AdaptiveCount]], VERDICT r14 #3).
+    // k = AdaptiveBands: scale the cluster count with the corpus so the
+    // per-cell quadratic stays bounded (the cluster index is this
+    // operator's banding). One eager count at plan-build time, memoized
+    // per corpus snapshot ([[AdaptiveCount]]).
     val kk = if (k == AdaptiveBands) {
       require(!df.isStreaming,
         "adaptive cluster count needs an eager count — pass explicit k " +

@@ -85,7 +85,7 @@ object Sketches {
     // outlive this call because the result is lazy, and Spark evicts
     // LRU if memory is ever tight. A caller looping over batches should
     // pass cacheBits=false and persist/unpersist the bits itself around
-    // the loop (the Dedup.incrementalPairs reuseBands convention).
+    // the loop (the Banded probes' batchBands storage convention).
     val cached =
       if (cacheBits)
         bits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -101,7 +101,7 @@ object Sketches {
     * materialized. Use this from loops / long-lived sessions where the
     * default cacheBits=true entry (deliberately left for the session,
     * see bloomPrune) would accumulate — the same persist/release
-    * convention as Dedup.incrementalPairs' reuseBands. */
+    * convention as the Banded probes' batchBands. */
   def bloomPruneReleasable(probe: DataFrame, keyCol: Column,
       bits: DataFrame, k: Int, m: Int): (DataFrame, () => Unit) = {
     val cached =

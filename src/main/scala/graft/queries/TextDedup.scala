@@ -714,7 +714,7 @@ object TextDedup {
 
   /** The text collision-side posting cap — same shared constant and
     * keepDuck rule as the embedding oracles, so the Spark operator
-    * (Dedup.truncateBands) and the oracle cannot drift. At gate scale
+    * (Banded.truncate) and the oracle cannot drift. At gate scale
     * every (bi, bv) bucket is far under the cap, so `bandsr` = `bands`
     * exactly. */
   private val mhCap = graft.operators.BucketCap.DefaultCap

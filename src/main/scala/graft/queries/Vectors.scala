@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.{Banded, Multimodal, Similarity}
 
 /** Embedding similarity-search + multimodal operator inventory
   * (SURVEY.md §2.11), oracle-gated via the scaled-integer determinism of
@@ -300,8 +300,7 @@ object Vectors {
     // (SURVEY §6 r13 recall table: 4-bit 0.65→~0 vs 8-bit 1.0→0.665,
     // the 8-bit run also FASTER). The formula itself is spec-pinned.
     "q302_ann_adaptive" -> ((s, d) =>
-      Similarity.lshKnnJoinAdaptive(emb(s, d), "vec_id", "embedding",
-        k = 3)),
+      Similarity.lshKnnJoin(emb(s, d), "vec_id", "embedding", k = 3)),
 
     // ---- q304: Hamming-1 MULTIPROBE k-NN join ----
     // q135's shape with the radius-1 probe fan-out (Lv et al. 2007):
@@ -625,15 +624,13 @@ object Vectors {
       // adaptive rule; clamp identity spec-pinned in OperatorSpec)
       val bands = Similarity.lshBands(e, "vec_id", "embedding",
         nBits = 16, bandBits = 4)
+      val layout = Similarity.bandLayout("vec_id", 16, 4)
       // train = collision side → posting-capped by TRAIN bucket sizes
       // (same rule as every LSH join; identity at gate scale)
-      val train = Similarity.truncateBuckets(
-        bands.filter(col("vec_id") % 5 =!= 0), "vec_id",
-        Similarity.DefaultBucketCap)
-      val cand = bands.filter(col("vec_id") % 5 === 0).as("x")
-        .join(train.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bucket") === col("y.bucket"))
+      val train = Banded.truncate(bands.filter(col("vec_id") % 5 =!= 0),
+        layout, Similarity.DefaultBucketCap)
+      val cand = Banded.collide(bands.filter(col("vec_id") % 5 === 0),
+          train, layout)
         .select(col("x.vec_id").as("qid"), col("y.vec_id").as("vid"))
         .dropDuplicates("qid", "vid")
       val p = Similarity.prepare(e, "embedding")
@@ -1122,7 +1119,7 @@ object Vectors {
     * band, bucket)` plus its capped collision side `br`) — shared by
     * the pair queries (via [[lshCtes]]) and the q135 knn join, which
     * ranks directed collisions instead of thresholding undirected
-    * ones. `br` mirrors Similarity.truncateBuckets via the shared
+    * ones. `br` mirrors Banded.truncate via the shared
     * BucketCap.keepDuck spelling (hash(id) ≡ 0 mod ⌈bn/cap⌉ when
     * bn > cap); at gate scale every bucket is under the cap so
     * `br` = `b` exactly. */

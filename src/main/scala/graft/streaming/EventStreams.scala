@@ -684,22 +684,13 @@ object EventStreams {
     * maintained from a document stream (exactly the q186 : q94
     * relationship). Seed: the corpus (doc_id % 5 != 0) band index,
     * built ONCE, bucketed on the band key. The q88 batch (doc_id % 5
-    * == 0) is staged as landed files and streamed; each micro-batch
-    *   (a) probes the persisted corpus index (bucket-aligned — zero
-    *       corpus-side exchange, q85's plan) AND the accumulated bands
-    *       of earlier micro-batches (delta-scale),
-    *   (b) exact-Jaccard-verifies its candidates and appends the
-    *       verified pairs, and
-    *   (c) appends its own bands, so later micro-batches see it.
-    * Pair discovery is symmetric (normalized ida < idb) and idempotent
-    * (re-verified duplicates agree bit-for-bit and the final
-    * dropDuplicates collapses them), so the accumulated pair set — and
-    * therefore the admission anti-join — equals the one-shot q88
-    * computation no matter how the landed files were chopped into
-    * micro-batches; a replayed file is harmless (incrementalPairs'
-    * self-pair guard strips the jac=1 echoes). 100 TB: per-trigger
-    * work is batch-sized; the corpus never re-exchanges.
-    */
+    * == 0) streams through [[runBandedStream]] (exact-Jaccard verify
+    * per micro-batch), so the accumulated pair set — and therefore the
+    * admission anti-join — equals the one-shot q88 computation no
+    * matter how the landed files were chopped into micro-batches; a
+    * replayed file is harmless (the probe's self-pair guard strips the
+    * jac=1 echoes). 100 TB: per-trigger work is batch-sized; the corpus
+    * never re-exchanges. */
   def streamingAdmissionStream(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       deltaFiles: Int = 2): DataFrame = {
@@ -714,32 +705,52 @@ object EventStreams {
     val thr = 0.5
     Dedup.writeBandIndex(corpus, "doc_id", "text",
       "graft_band_index_q193", k = k, rows = rows, nBuckets = 8)
-    graft.sources.Tables.writeTable(
-      Dedup.bandTable(all.limit(0), "doc_id", "text", k, rows),
-      "graft_q193_batch_bands")
-    graft.sources.Tables.writeTable(
-      all.limit(0).select(col("doc_id").as("ida"),
-        col("doc_id").as("idb"), col("n_chars").cast("double").as("jac")),
-      "graft_q193_pairs")
-    runStagedStream(spark, "graft_q193",
+    val pairs = runBandedStream(spark, "graft_q193", "graft_band_index_q193",
       batchDocs.select("doc_id", "text", "lang", "source", "n_chars"),
-      docSchema, maxFilesPerTrigger, deltaFiles, (mb, _) => {
-        val bands = Dedup.bandTable(mb, "doc_id", "text", k, rows).cache()
-        val vsIndex = Dedup.incrementalPairs(mb, "graft_band_index_q193",
-          all, "doc_id", "text", k, rows, thr, reuseBands = Some(bands))
-        val vsEarlier = Dedup.incrementalPairs(mb, "graft_q193_batch_bands",
-          all, "doc_id", "text", k, rows, thr, reuseBands = Some(bands))
-        vsIndex.union(vsEarlier).dropDuplicates("ida", "idb")
-          .write.mode("append").format("parquet")
-          .saveAsTable("graft_q193_pairs")
-        bands.write.mode("append").format("parquet")
-          .saveAsTable("graft_q193_batch_bands")
+      docSchema, maxFilesPerTrigger, deltaFiles, None,
+      Dedup.bandTable(_, "doc_id", "text", k, rows),
+      (mb, index, bands) => Dedup.incrementalPairs(mb, index, all,
+        "doc_id", "text", k, rows, thr, batchBands = Some(bands)))
+    Dedup.admitBatch(batchDocs, pairs, "doc_id").select("doc_id")
+  }
+
+  /** The banded near-dup stream cycle of q193 (text), q291 (images) and
+    * q295 (embeddings): stage `delta` as landed files and stream it.
+    * Each micro-batch is banded ONCE — persisted, shared by both probes
+    * and the append, released before the next batch (the probes pin
+    * nothing: [[graft.operators.Banded]]'s storage convention) — and
+    *   (a) probes the persisted corpus `index` (bucket-aligned — zero
+    *       corpus-side exchange) AND `${prefix}_batch_bands`, the
+    *       accumulated bands of earlier micro-batches (delta-scale),
+    *   (b) appends its verified pairs to `${prefix}_pairs`, and
+    *   (c) appends its own bands so later micro-batches see them.
+    * Pairs are normalized (ida < idb) and idempotent and ids are unique,
+    * so the returned read-side dropDuplicates(ida, idb) absorbs replays
+    * and makes the pair set invariant to the micro-batch chopping.
+    * Both tables are seeded empty with the schemas `band` and `probe`
+    * produce on an empty batch. */
+  private def runBandedStream(spark: SparkSession, prefix: String,
+      index: String, delta: DataFrame, schema: StructType,
+      maxFilesPerTrigger: Option[Int], deltaFiles: Int,
+      chaosKillAfter: Option[Int], band: DataFrame => DataFrame,
+      probe: (DataFrame, String, DataFrame) => DataFrame): DataFrame = {
+    val (bandsTable, pairsTable) = (s"${prefix}_batch_bands", s"${prefix}_pairs")
+    val none = band(delta.limit(0))
+    graft.sources.Tables.writeTable(none, bandsTable)
+    graft.sources.Tables.writeTable(probe(delta.limit(0), index, none),
+      pairsTable)
+    runStagedStream(spark, prefix, delta, schema, maxFilesPerTrigger,
+      deltaFiles, onBatch = (mb, _) => {
+        val bands = band(mb)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        probe(mb, index, bands).union(probe(mb, bandsTable, bands))
+          .dropDuplicates("ida", "idb")
+          .write.mode("append").format("parquet").saveAsTable(pairsTable)
+        bands.write.mode("append").format("parquet").saveAsTable(bandsTable)
         bands.unpersist()
         ()
-      })
-    Dedup.admitBatch(batchDocs,
-      spark.table("graft_q193_pairs").dropDuplicates("ida", "idb"), "doc_id")
-      .select("doc_id")
+      }, chaosKillAfter = chaosKillAfter)
+    spark.table(pairsTable).dropDuplicates("ida", "idb")
   }
 
   /** q289: STREAMING decontamination admission — q288's frozen-index
@@ -871,20 +882,12 @@ object EventStreams {
     * relationship applied to the multimodal index, completing the
     * image lattice: q185 one-shot : q188 batch-incremental : q291
     * streaming). The corpus chunk index is built and bucketed ONCE;
-    * each micro-batch then decodes and hashes ONLY ITS OWN images,
-    *   (a) probes the persisted corpus index (bucket-aligned — zero
-    *       corpus-side exchange, corpus pixels never re-decoded) AND
-    *       the accumulated chunk rows of earlier micro-batches
-    *       (delta-scale),
-    *   (b) appends the verified Hamming<=3 pairs, and
-    *   (c) appends its own chunk rows so later micro-batches see it.
-    * Pair discovery is symmetric (least/greatest normalization) and
-    * idempotent, and doc_id IS unique here, so the read-side
-    * dropDuplicates(ida, idb) is the exact q193 replay posture — the
-    * union over any micro-batch chopping equals one-shot q188 and
-    * this shares q188's brute-force oracle verbatim. 100 TB:
-    * per-trigger decode+probe work is batch-sized; the corpus never
-    * re-exchanges and its pixels are never touched again. */
+    * each micro-batch of [[runBandedStream]] then decodes and hashes
+    * ONLY ITS OWN images and appends its Hamming<=3 pairs, so the union
+    * over any micro-batch chopping equals one-shot q188 and this shares
+    * q188's brute-force oracle verbatim. 100 TB: per-trigger
+    * decode+probe work is batch-sized; the corpus never re-exchanges
+    * and its pixels are never touched again. */
   def streamingImageDedupStream(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       deltaFiles: Int = 2,
@@ -896,34 +899,13 @@ object EventStreams {
     Multimodal.writeAHashIndex(
       hashesOf(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)),
       "graft_ahash_index_q291")
-    graft.sources.Tables.writeTable(
-      Multimodal.aHashChunkTable(hashesOf(docs.limit(0))),
-      "graft_q291_batch_chunks")
-    graft.sources.Tables.writeTable(
-      hashesOf(docs.limit(0)).select(col("doc_id").as("ida"),
-        col("doc_id").as("idb"),
-        expr("CAST(0 AS INT)").as("hamming")),
-      "graft_q291_pairs")
-    runStagedStream(spark, "graft_q291",
+    runBandedStream(spark, "graft_q291", "graft_ahash_index_q291",
       docs.filter(pmod(col("doc_id"), lit(5)) === 0)
         .select("doc_id", "text", "lang", "source", "n_chars"),
-      docSchema, maxFilesPerTrigger, deltaFiles, onBatch = (mb, _) => {
-        val hashes = hashesOf(mb)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val vsIndex = Multimodal.incrementalAHashPairs(
-          hashes, "graft_ahash_index_q291")
-        val vsEarlier = Multimodal.incrementalAHashPairs(
-          hashes, "graft_q291_batch_chunks")
-        vsIndex.union(vsEarlier).distinct()
-          .write.mode("append").format("parquet")
-          .saveAsTable("graft_q291_pairs")
-        Multimodal.aHashChunkTable(hashes)
-          .write.mode("append").format("parquet")
-          .saveAsTable("graft_q291_batch_chunks")
-        hashes.unpersist()
-        ()
-      }, chaosKillAfter = chaosKillAfter)
-    spark.table("graft_q291_pairs").dropDuplicates("ida", "idb")
+      docSchema, maxFilesPerTrigger, deltaFiles, chaosKillAfter,
+      mb => Multimodal.aHashChunkTable(hashesOf(mb)),
+      (mb, index, chunks) => Multimodal.incrementalAHashPairs(
+        hashesOf(mb), index, batchBands = Some(chunks)))
   }
 
   /** q293: STREAMING Bloom-bit maintenance — the Bloom face of the
@@ -973,17 +955,9 @@ object EventStreams {
     * the embedding modality, closing the last one-shot :
     * batch-incremental : streaming asymmetry in the tree: q63 : q87 :
     * q295). The corpus band index + its `_sizes` side table are built
-    * ONCE, bucketed on the band key; each micro-batch then
-    *   (a) probes the persisted corpus index (bucket-aligned — zero
-    *       corpus-side exchange) AND the accumulated bands of earlier
-    *       micro-batches (delta-scale, sizes recomputed from the
-    *       delta-sized table),
-    *   (b) exact-cosine-verifies its candidates and appends the
-    *       verified pairs, and
-    *   (c) appends its own bands so later micro-batches see it.
-    * Pair discovery is symmetric (the x<y split) and idempotent, and
-    * vec_id IS unique, so the read-side dropDuplicates(ida, idb) is
-    * the q193 replay posture. The cap GENUINELY binds one decade up
+    * ONCE, bucketed on the band key; each micro-batch of
+    * [[runBandedStream]] then exact-cosine-verifies and appends its
+    * pairs. The cap GENUINELY binds one decade up
     * (16-value LSH buckets grow linearly with the corpus), so every
     * probe truncates under the same FINAL union sizes the one-shot
     * recompute uses — computed manifest-lands-first (see the sizes
@@ -1000,63 +974,32 @@ object EventStreams {
     val all = graft.sources.Tables.read(spark, sfDir, "embeddings")
     val corpus = all.filter(col("vec_id") % 5 =!= 0)
     val batch = all.filter(col("vec_id") % 5 === 0)
-    // banding pinned to the oracle-baked 16/4 (this is an ORACLE-GATED
-    // face whose q87 oracle bakes those constants at every adjudicated
-    // scale; a production stream resolves Similarity.adaptiveBandBits
-    // from its reference corpus at setup and threads it the same way —
-    // the _banding metadata check below fails loudly on any mismatch)
+    // banding pinned to q87's oracle-baked 16/4 (a production stream
+    // resolves Similarity.adaptiveBandBits at setup and threads it the
+    // same way; the _banding check fails loudly on any mismatch)
     val bandBits = 4
     val nBits = 4 * bandBits
     Similarity.writeLshIndex(corpus, "vec_id", "embedding",
       "graft_lsh_index_q295", nBits, bandBits, nBuckets = 8)
+    // manifest-lands-first sizes: one narrow band-count pass over the
+    // landed batch, merged with the corpus `_sizes` BEFORE contents
+    // stream, so every micro-batch probe truncates under the FINAL union
+    // sizes the one-shot recompute uses (the capped law's exactness).
     graft.sources.Tables.writeTable(
-      Similarity.lshBands(all.limit(0), "vec_id", "embedding",
-        nBits, bandBits),
-      "graft_q295_batch_bands")
-    graft.sources.Tables.writeTable(
-      Similarity.incrementalLshPairs(all.limit(0),
-        "graft_lsh_index_q295", all, "vec_id", "embedding",
-        threshold = 0.35, nBits = nBits, bandBits = bandBits),
-      "graft_q295_pairs")
-    // manifest-lands-first sizes: the batch's band-size partials are
-    // one narrow count pass over the landed files, computed BEFORE
-    // contents stream and merged with the corpus `_sizes` side table —
-    // so every micro-batch probe truncates under the same FINAL union
-    // sizes the one-shot recompute uses (the capped law's exactness
-    // condition; without this, wherever the cap binds each micro-batch
-    // would under-truncate and emit pairs the one-shot cap drops).
-    graft.sources.Tables.writeTable(
-      spark.table("graft_lsh_index_q295_sizes")
-        .withColumnRenamed("graft_bsz", "graft_csz")
-        .join(Similarity.lshBands(batch, "vec_id", "embedding",
-              nBits, bandBits)
-            .groupBy("band", "bucket").agg(count(lit(1)).as("graft_nsz")),
-          Seq("band", "bucket"), "full_outer")
-        .select(col("band"), col("bucket"),
-          (coalesce(col("graft_csz"), lit(0L)) +
-            coalesce(col("graft_nsz"), lit(0L))).as("graft_bsz")),
+      graft.operators.Banded.unionSizes(
+        spark.table("graft_lsh_index_q295_sizes"),
+        Similarity.lshBands(batch, "vec_id", "embedding", nBits, bandBits),
+        Seq("band", "bucket")),
       "graft_q295_union_sizes")
-    runStagedStream(spark, "graft_q295",
+    runBandedStream(spark, "graft_q295", "graft_lsh_index_q295",
       batch.select("vec_id", "embedding", "label"),
-      embSchema, maxFilesPerTrigger, deltaFiles, onBatch = (mb, _) => {
-        val sizes = spark.table("graft_q295_union_sizes")
-        val vsIndex = Similarity.incrementalLshPairs(mb,
-          "graft_lsh_index_q295", all, "vec_id", "embedding",
-          threshold = 0.35, nBits = nBits, bandBits = bandBits,
-          unionSizesOverride = Some(sizes))
-        val vsEarlier = Similarity.incrementalLshPairs(mb,
-          "graft_q295_batch_bands", all, "vec_id", "embedding",
-          threshold = 0.35, nBits = nBits, bandBits = bandBits,
-          unionSizesOverride = Some(sizes))
-        vsIndex.union(vsEarlier).dropDuplicates("ida", "idb")
-          .write.mode("append").format("parquet")
-          .saveAsTable("graft_q295_pairs")
-        Similarity.lshBands(mb, "vec_id", "embedding", nBits, bandBits)
-          .write.mode("append").format("parquet")
-          .saveAsTable("graft_q295_batch_bands")
-        ()
-      }, chaosKillAfter = chaosKillAfter)
-    spark.table("graft_q295_pairs").dropDuplicates("ida", "idb")
+      embSchema, maxFilesPerTrigger, deltaFiles, chaosKillAfter,
+      Similarity.lshBands(_, "vec_id", "embedding", nBits, bandBits),
+      (mb, index, bands) => Similarity.incrementalLshPairs(mb, index, all,
+        "vec_id", "embedding", threshold = 0.35, nBits = nBits,
+        bandBits = bandBits,
+        unionSizesOverride = Some(spark.table("graft_q295_union_sizes")),
+        batchBands = Some(bands)))
   }
 
   /** q294: STREAMING PQ encode — q214's frozen-codebook encode

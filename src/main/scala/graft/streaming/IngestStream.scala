@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.Dedup
+import graft.operators.{Banded, Dedup}
 
 /** Continuous ingest with near-dup admission — the streaming face of
   * the incremental dedup family (Dedup.writeBandIndex /
@@ -72,7 +72,7 @@ object IngestStream {
       val corpus = corpusDocs(spark, corpusPath, idCol, textCol)
       val pairs = Dedup.incrementalPairs(b, bandTable,
         corpus.unionByName(b), idCol, textCol, k, rows, threshold,
-        reuseBands = Some(bands))
+        batchBands = Some(bands))
       // MATERIALIZE the admission decision before touching the store:
       // on a replayed batch the decision's verify stage reads the very
       // `batch=<id>` partition the idempotent overwrite below is about
@@ -94,31 +94,13 @@ object IngestStream {
       // corpusDocs read (or any reader of corpusPath) re-lists instead
       // of failing on the replaced file names
       spark.catalog.refreshByPath(corpusPath)
-      // grow the index with the ADMITTED docs' bands (semi-join on
-      // the already-computed batch bands — no second minhash pass)
-      // so the NEXT micro-batch dedups against them; nBuckets MUST
-      // match the writeBandIndex build so appended files keep the
-      // bucket-pruned probe path
+      // grow the index with the ADMITTED docs' bands (no second minhash
+      // pass) so the NEXT micro-batch dedups against them; nBuckets MUST
+      // match the writeBandIndex build
       val admittedBands =
         bands.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-      // maintain the `_sizes` partials alongside the band append
-      // (readers SUM per key — writeBandIndex's convention), sizes
-      // first so a crash between the appends over-counts (recall-only
-      // inside over-cap buckets) rather than under-counts; a replayed
-      // batch double-appends BOTH tables, so the sizes keep matching
-      // the physical index row counts the collision joins actually see.
-      // A pre-r10 index without the side table gets it seeded from the
-      // index ONCE here — appending partials alone would silently
-      // under-count the original corpus.
-      val sizesTable = s"${bandTable}_sizes"
-      if (!spark.catalog.tableExists(sizesTable))
-        graft.sources.Tables.writeTable(
-          Dedup.bandSizes(spark.table(bandTable)), sizesTable)
-      Dedup.bandSizes(admittedBands).write.mode("append")
-        .format("parquet").saveAsTable(sizesTable)
-      admittedBands.write.mode("append")
-        .bucketBy(nBuckets, "bi", "bv").sortBy("bi", "bv")
-        .format("parquet").saveAsTable(bandTable)
+      Banded.appendIndex(admittedBands, Dedup.bandLayout(idCol), bandTable,
+        nBuckets)
       admitted.unpersist()
       ()
     } finally { bands.unpersist(); b.unpersist() }

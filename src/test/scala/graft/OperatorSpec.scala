@@ -1697,24 +1697,10 @@ class OperatorSpec extends SparkTestBase {
     assert(capped.exceptAll(open).count() == 0 &&
       open.exceptAll(capped).count() == 0)
 
-    // 2) truncation implements EXACTLY the documented hash rule:
-    // bucket of size n > cap keeps ids whose BucketCap hash ≡ 0
-    // (mod ⌈n/cap⌉), others pass (BucketCap.keeps is the Scala replay
-    // of the same arithmetic the Spark SQL and DuckDB spellings use)
+    // 2) the keep rule itself (and that cap=3 is ACTIVE on this data,
+    // without which (3) proves nothing) is pinned by the shared
+    // "bucket-cap keep rule: Banded.truncate replays BucketCap.keeps" spec
     val cap = 3
-    val bands = Similarity.lshBands(e, "vec_id", "embedding")
-    val got = Similarity.truncateBuckets(bands, "vec_id", cap)
-      .select($"band", $"bucket", $"vec_id").as[(Int, Int, Long)]
-      .collect().toSet
-    val raw = bands.select($"band", $"bucket", $"vec_id")
-      .as[(Int, Int, Long)].collect()
-    val want = raw.groupBy(r => (r._1, r._2)).iterator.flatMap {
-      case (_, rs) => rs.filter(r =>
-        operators.BucketCap.keeps(r._3, rs.length, cap))
-    }.toSet
-    assert(got == want, "truncateBuckets diverged from the hash rule")
-    // the cap is ACTIVE on this data — otherwise (3) proves nothing
-    assert(got.size < raw.length, "cap=3 must truncate at spec scale")
 
     // 3) the incremental law SURVIVES the capped regime: with a cap
     // small enough to truncate, incremental == one-shot over the union
@@ -1818,6 +1804,36 @@ class OperatorSpec extends SparkTestBase {
       "cap=3 must truncate at spec scale for this law to bite")
   }
 
+  test("bucket-cap keep rule: Banded.truncate replays BucketCap.keeps on " +
+      "the text and embedding band tables") {
+    // ONE truncation serves both families: per band-key group, a row
+    // survives iff BucketCap.keeps(id, group size, cap) — the Scala
+    // replay of the arithmetic the Spark SQL and DuckDB spellings use —
+    // and each cap below is ACTIVE on its table, so the capped
+    // incremental laws of the two family specs are not vacuous
+    val e = sources.Tables.read(spark, sf, "embeddings")
+    val docs = sources.Tables.read(spark, sf, "documents")
+      .select("doc_id", "text")
+    val tables = Seq(
+      ("embedding", Similarity.lshBands(e, "vec_id", "embedding"),
+        Similarity.bandLayout("vec_id", 16, 4), 3),
+      ("text", Dedup.bandTable(docs, "doc_id", "text"),
+        Dedup.bandLayout("doc_id"), 1))
+    for ((name, bands, layout, cap) <- tables) {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select((layout.keys :+ layout.idCol).map(col): _*).collect()
+          .map(r => (r.toSeq.init, r.getLong(r.length - 1)))
+      val got = rows(Banded.truncate(bands, layout, cap)).toSet
+      val raw = rows(bands)
+      val want = raw.groupBy(_._1).iterator.flatMap {
+        case (_, rs) => rs.filter(r => BucketCap.keeps(r._2, rs.length, cap))
+      }.toSet
+      assert(got == want, s"$name truncation diverged from the hash rule")
+      assert(got.size < raw.length,
+        s"cap=$cap must truncate the $name table at spec scale")
+    }
+  }
+
   test("bucket-cap keep rule is id-distribution and divisor-structure independent") {
     import spark.implicits._
     // The r9 ADVICE scenario: every id ≡ 0 (mod 5) in one degenerate
@@ -1828,7 +1844,8 @@ class OperatorSpec extends SparkTestBase {
     val cap = 20 // divisor = ceil(100/20) = 5, sharing the id stride
     val bands = (0 until n).map(i => (i * 5L, 0, 0))
       .toDF("vec_id", "band", "bucket")
-    val kept = Similarity.truncateBuckets(bands, "vec_id", cap)
+    val layout = Similarity.bandLayout("vec_id", 16, 4)
+    val kept = Banded.truncate(bands, layout, cap)
       .select($"vec_id").as[Long].collect().toSet
     val want = (0 until n).map(_ * 5L)
       .filter(id => operators.BucketCap.keeps(id, n, cap)).toSet
@@ -1842,7 +1859,7 @@ class OperatorSpec extends SparkTestBase {
     // silently zeroing recall in that bucket; the hash rule keeps some.
     val bands2 = (0 until n).map(i => (i * 5L + 3L, 0, 0))
       .toDF("vec_id", "band", "bucket")
-    val kept2 = Similarity.truncateBuckets(bands2, "vec_id", cap)
+    val kept2 = Banded.truncate(bands2, layout, cap)
       .select($"vec_id").as[Long].collect().toSet
     assert(kept2.nonEmpty, "hash rule zeroed the 3-mod-5 bucket")
     assert(kept2.size < n / 2, s"3-mod-5 bucket kept ${kept2.size}/$n")
@@ -1863,22 +1880,10 @@ class OperatorSpec extends SparkTestBase {
     assert(capped.exceptAll(open).count() == 0 &&
       open.exceptAll(capped).count() == 0)
 
-    // 2) truncation implements EXACTLY the shared BucketCap rule
-    // per (bi, bv) group, and cap=1 is ACTIVE on this data (every
-    // bucket of size >= 2 — i.e. every real collision — truncates).
+    // 2) the keep rule itself (and that cap=1 is ACTIVE on this data:
+    // every bucket of size >= 2 truncates) is pinned by the shared
+    // "bucket-cap keep rule: Banded.truncate replays BucketCap.keeps" spec
     val cap = 1
-    val bands = Dedup.bandTable(docs, "doc_id", "text")
-    val got = Dedup.truncateBands(bands, "doc_id", cap)
-      .select($"bi", $"bv", $"doc_id").as[(Int, String, Long)]
-      .collect().toSet
-    val raw = bands.select($"bi", $"bv", $"doc_id")
-      .as[(Int, String, Long)].collect()
-    val want = raw.groupBy(r => (r._1, r._2)).iterator.flatMap {
-      case (_, rs) => rs.filter(r =>
-        operators.BucketCap.keeps(r._3, rs.length, cap))
-    }.toSet
-    assert(got == want, "truncateBands diverged from the hash rule")
-    assert(got.size < raw.length, "cap=1 must truncate at spec scale")
 
     // 3) the incremental law SURVIVES the capped regime for a
     // disjoint batch: with a truncating cap, incremental == one-shot
@@ -1933,7 +1938,7 @@ class OperatorSpec extends SparkTestBase {
     val e = sources.Tables.read(spark, sf, "embeddings")
     val fixed = Similarity.lshKnnJoin(e, "vec_id", "embedding", k = 3,
       nBits = 16, bandBits = 4)
-    val adaptive = Similarity.lshKnnJoinAdaptive(e, "vec_id", "embedding", k = 3)
+    val adaptive = Similarity.lshKnnJoin(e, "vec_id", "embedding", k = 3)
     assert(adaptive.exceptAll(fixed).count() == 0 &&
       fixed.exceptAll(adaptive).count() == 0)
   }

@@ -19,6 +19,25 @@ class StreamingSpec extends SparkTestBase {
     dir.toString
   }
 
+  /** Storage the session holds: persisted RDDs and cached plans (the
+    * CacheManager's entry count is package-private in Spark, hence the
+    * reflective read). */
+  private def pinned(): (Int, Int) = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    (spark.sparkContext.getPersistentRDDs.size,
+      cm.getClass.getMethod("numCachedEntries").invoke(cm)
+        .asInstanceOf[Int])
+  }
+
+  /** A stream's per-micro-batch storage must not outlive it. */
+  private def assertNoneLeft(before: (Int, Int), what: String): Unit = {
+    val after = pinned()
+    assert(after._1 <= before._1 && after._2 <= before._2,
+      s"$what left storage behind (persisted RDDs, cached plans): " +
+        s"$before -> $after")
+  }
+
   private def runToMemory(df: org.apache.spark.sql.DataFrame,
       name: String, mode: String): Unit = {
     val q = df.writeStream.format("memory").queryName(name)
@@ -542,11 +561,13 @@ class StreamingSpec extends SparkTestBase {
     // both append idempotently (doc_id is unique, pairs normalize
     // least/greatest, and the read-side dropDuplicates absorbs any
     // replay).
+    val before = pinned()
     val merged = EventStreams.streamingImageDedupStream(
         spark, sf, maxFilesPerTrigger = Some(1), deltaFiles = 6,
         chaosKillAfter = Some(3))
       .select("ida", "idb", "hamming")
       .as[(Long, Long, Int)].collect().toSet
+    assertNoneLeft(before, "the image-dedup stream")
     val oneShot = SparkEntry.queries("q188_incr_image_dedup")(spark, sf)
       .select("ida", "idb", "hamming")
       .as[(Long, Long, Int)].collect().toSet
@@ -601,10 +622,12 @@ class StreamingSpec extends SparkTestBase {
     // accumulated pair set must equal one-shot q87 (which rebuilds its
     // own index) even when the stream dies after 3 committed
     // micro-batches and resumes from the checkpoint.
+    val before = pinned()
     val merged = EventStreams.streamingEmbedDedupStream(
         spark, sf, maxFilesPerTrigger = Some(1), deltaFiles = 6,
         chaosKillAfter = Some(3))
       .select("ida", "idb").as[(Long, Long)].collect().toSet
+    assertNoneLeft(before, "the embed-dedup stream")
     val oneShot = SparkEntry.queries("q87_incr_embed_dedup")(spark, sf)
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(merged.nonEmpty)
