@@ -210,17 +210,18 @@ object Bench {
     // changes require a verdict directive). Listener delivery is
     // async; the read happens after the post-query cleanup (clearCache
     // + GC, several ms), so stragglers land in the right bucket in
-    // practice — a diagnostic field, not a gate.
+    // practice — a diagnostic field, not a gate. Removed once the diag
+    // is written.
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          taskTimeMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-          ()
-        }
-      })
+    val taskTimeListener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted)
+          : Unit = {
+        taskTimeMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(taskTimeListener)
 
     // warmup: session + whole-stage-codegen init
     materialize(SparkEntry.queries("q05_groupby_sum")(spark, sfDir))
@@ -568,6 +569,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write target/bench.json: ${e.getMessage}")
     }
+    spark.sparkContext.removeSparkListener(taskTimeListener)
     stopThenGate(() => spark.stop(), gate)
   }
 

@@ -85,8 +85,11 @@ final case class Table(df: DataFrame) {
       // Suffix colliding names (keys included when both sides share the
       // name — Acero suffixes any collision).
       val collide = a.columns.toSet.intersect(b.columns.toSet)
-      val al = collide.foldLeft(a)((d, c) => d.withColumnRenamed(c, c + "_l"))
-      val bl = collide.foldLeft(b)((d, c) => d.withColumnRenamed(c, c + "_r"))
+      def suffixed(d: DataFrame, sfx: String) =
+        if (collide.isEmpty) d
+        else d.withColumnsRenamed(collide.map(c => c -> (c + sfx)).toMap)
+      val al = suffixed(a, "_l")
+      val bl = suffixed(b, "_r")
       def ln(c: String) = if (collide(c)) c + "_l" else c
       def rn(c: String) = if (collide(c)) c + "_r" else c
       val cond = ak.zip(bk).map { case (l, r) => al(ln(l)) === bl(rn(r)) }

@@ -235,7 +235,7 @@ object Verify {
           only.forall(_.contains(n)) && !adaptiveBypass(n))
         if (sel.isEmpty) Map.empty
         else scala.util.Try(
-            spark.read.parquet(s"$sfDir/$table.parquet").count()) match {
+            graft.sources.Tables.read(spark, sfDir, table).count()) match {
           // an unreadable/corrupt gate table error-marks ONLY these
           // gate names (ADVICE r14: an unguarded count here aborted
           // the ENTIRE sweep before any query ran); the per-query

@@ -2,59 +2,41 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
+import graft.sources.SnapshotMemo
+
 /** Session-scoped memo for the ONE eager `count()` that adaptive
   * parameter resolution runs at plan-build time ([[Banded.resolve]] for
   * the banded families, SemDeDup's cluster count): one count per corpus
   * snapshot per session, not a footer/metadata scan per operator call.
   *
-  * Cache key = (session identity, plan semantic hash, input-file list
-  * hash). The file-list component is what makes a same-path OVERWRITE
-  * a cache miss: every supported writer (Spark parquet overwrite,
-  * [[graft.sources.Tables.writeTable]]) emits fresh part-file names,
-  * so the `inputFiles` set changes whenever the data does. The one
-  * mutation this cannot see — bytes rewritten IN PLACE inside an
-  * existing part file — is not a write path any Spark sink produces.
-  * Both reads (semantic hash, file listing) are driver-side only: the
-  * file index was already materialized when the plan was analyzed, so
-  * no job runs on a cache hit OR for the key itself.
+  * Key = (plan semantic hash, input-file list hash) in a
+  * [[graft.sources.SnapshotMemo]], which adds the session. The file-list
+  * component is what makes a same-path OVERWRITE a miss: every supported
+  * writer (Spark parquet overwrite, [[graft.sources.Tables.writeTable]])
+  * emits fresh part-file names, so the `inputFiles` set changes whenever
+  * the data does. The one mutation this cannot see — bytes rewritten IN
+  * PLACE inside an existing part file — is not a write path any Spark
+  * sink produces. Both reads (semantic hash, file listing) are
+  * driver-side only: the file index was already materialized when the
+  * plan was analyzed, so no job runs on a hit OR for the key itself.
   *
-  * Hash keys alone are not identity: a hash collision — or
-  * `identityHashCode` reuse after a stopped session is GC'd — would
-  * silently serve another corpus's count. So the cached VALUE carries
-  * the actual file list, a weak session reference, AND a sha-256 digest
-  * of the canonicalized plan (a corpus and its filtered slice share
-  * session and file list and differ only in the 32-bit semanticHash).
-  * A hit is honored only after confirming all three by equality; any
-  * mismatch falls back to a fresh count (recorded as a miss) and
-  * replaces the entry. The session reference is weak so the memo never
-  * pins a stopped session's object graph. */
+  * The evidence checked on every hit is the actual file list plus a
+  * sha-256 digest of the canonicalized plan (a corpus and its filtered
+  * slice share session and file list and differ only in the 32-bit
+  * semanticHash). */
 private[graft] object AdaptiveCount {
 
-  /** Cache value: the count plus the evidence that the key really is
-    * ours — compared by equality on every hit, not trusted by hash. */
-  private[graft] final case class Entry(
-      session: java.lang.ref.WeakReference[AnyRef],
-      files: Array[String],
-      planDigest: String,
-      count: Long)
+  private[graft] val memo = new SnapshotMemo[(Int, Int), (Seq[String], String), Long]
 
-  private[graft] val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Entry]()
-
-  /** Count jobs actually run (cache misses) — spec-pinned, and surfaced
+  /** Count jobs actually run (memo misses) — spec-pinned, and surfaced
     * in the Bench/Verify diag JSON so every committed artifact shows the
     * one-count-per-corpus-per-session contract holding. */
-  private[graft] val misses = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def misses = memo.misses
 
-  /** Backstop against unbounded growth in a session that churns
-    * thousands of distinct corpora: the memo is an optimization, so
-    * wholesale invalidation is always safe. */
-  private val MaxEntries = 1024
-
-  private[graft] def keyOf(df: DataFrame): ((Int, Int, Int), Array[String]) = {
-    val files = df.inputFiles
-    ((System.identityHashCode(df.sparkSession), df.semanticHash(),
-      java.util.Arrays.hashCode(files.asInstanceOf[Array[AnyRef]])), files)
+  /** (key, evidence) of `df`. */
+  private[graft] def keyOf(df: DataFrame): ((Int, Int), (Seq[String], String)) = {
+    val files = df.inputFiles.toSeq
+    ((df.semanticHash(), files.hashCode), (files, planDigestOf(df)))
   }
 
   /** sha-256 of the canonicalized analyzed plan — the full-strength
@@ -68,20 +50,10 @@ private[graft] object AdaptiveCount {
   }
 
   private[graft] def of(df: DataFrame): Long = {
-    val (key, files) = keyOf(df)
-    val digest = planDigestOf(df)
-    val cached = cache.get(key)
-    if (cached != null && (cached.session.get() eq df.sparkSession) &&
-        cached.planDigest == digest &&
-        java.util.Arrays.equals(
-          cached.files.asInstanceOf[Array[AnyRef]],
-          files.asInstanceOf[Array[AnyRef]]))
-      return cached.count
-    val n = { misses.incrementAndGet(); df.count() }
-    if (cache.size() >= MaxEntries) cache.clear()
-    cache.put(key, Entry(
-      new java.lang.ref.WeakReference[AnyRef](df.sparkSession), files,
-      digest, n))
-    n
+    val (key, evidence) = keyOf(df)
+    memo(df.sparkSession, key)(n => Some((n, evidence))) {
+      val n = df.count()
+      (n, evidence, n)
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet source layer.
   *
@@ -15,8 +17,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference has **no write sink at all** (results leave only via
   * fetch, `src/partition.cpp:363-383`); we expose parquet write as the
   * canonical sink since any real 100 TB pipeline needs one.
+  *
+  * Schema memo. Every parquet read here ([[read]], [[readParquet]],
+  * [[tsStoredAsLong]]) infers a source's schema once per file snapshot
+  * per session: Spark's inference runs a one-task footer job, which would
+  * otherwise run during plan construction on every call.
+  *  - Key: the session, the read's path list, and the confs that change
+  *    parquet inference ([[InferenceConfs]]).
+  *  - Evidence: the snapshot — path, length and modification time of
+  *    every file — taken from the file index the read itself built, so a
+  *    hit lists the files once, like any read, and runs no job.
+  *  - A hit reads with the memoized schema. A changed snapshot (a file
+  *    added, removed, or rewritten in place), a changed conf, or a read
+  *    that fails with the memoized schema falls back to a plain inferring
+  *    read, which raises what an unmemoized read raises, and replaces the
+  *    entry.
+  *  - The key cannot see a file whose bytes change while its path,
+  *    length and modification time all stay the same, nor a conf outside
+  *    [[InferenceConfs]]. No Spark writer produces the former.
   */
 object Tables {
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  private val schemas =
+    new SnapshotMemo[(Seq[Option[String]], Seq[String]), Seq[(String, Long, Long)], StructType]
+
+  /** `spark.read.parquet(paths)` with the schema memo described above. */
+  private def parquet(spark: SparkSession, paths: String*): DataFrame =
+    schemas(spark, (InferenceConfs.map(spark.conf.getOption), paths)) { schema =>
+      scala.util.Try(spark.read.schema(schema).parquet(paths: _*)).toOption
+        .flatMap(df => snapshotOf(df).map(df -> _))
+    } {
+      val df = spark.read.parquet(paths: _*)
+      (df, snapshotOf(df).getOrElse(Nil), df.schema)
+    }
+
+  /** Path, length and modification time of every file `df` scans, read
+    * from the file index its relation holds (no second listing). None
+    * when the plan holds no file relation: such a read is never served
+    * from the memo. */
+  private def snapshotOf(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sorted
+      }
 
   /** Read one table of the driver corpus: `{dir}/{name}.parquet`.
     *
@@ -27,7 +82,7 @@ object Tables {
     * downstream operators never see the storage difference.
     */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") canonicalTs(df) else df
   }
 
@@ -62,8 +117,9 @@ object Tables {
   /** True when `path`'s events parquet stores `ts` as int64 ns (the
     * `nanosAsLong` vintage); false for native timestamp storage. Used by
     * streaming readers, which must DECLARE a schema up front and so need
-    * the storage class before opening the stream. One driver-side footer
-    * read; negligible against stream startup.
+    * the storage class before opening the stream. Goes through the
+    * schema memo, so reopening a stream on an unchanged directory runs
+    * no inference job.
     *
     * A directory with NO parquet footers yet (an empty landing dir a
     * stream is opened on before the first file arrives — the normal
@@ -75,7 +131,7 @@ object Tables {
     * [[graft.streaming.EventStreams.fromDirectory]]. */
   def tsStoredAsLong(spark: SparkSession, path: String): Boolean =
     try
-      spark.read.parquet(path).schema("ts").dataType ==
+      parquet(spark, path).schema("ts").dataType ==
         org.apache.spark.sql.types.LongType
     catch {
       case _: org.apache.spark.sql.AnalysisException => false
@@ -96,7 +152,7 @@ object Tables {
   def readParquet(spark: SparkSession, path: String): DataFrame = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(hPath)) spark.read.parquet(path)
+    if (fs.exists(hPath)) parquet(spark, path)
     else {
       val parent = hPath.getParent
       require(parent != null && fs.exists(parent),
@@ -107,7 +163,7 @@ object Tables {
         .map(_.toString).sorted
       require(matched.nonEmpty,
         s"readParquet: no entry of $parent matches regex '${hPath.getName}'")
-      spark.read.parquet(matched: _*)
+      parquet(spark, matched: _*)
     }
   }
 

@@ -2098,12 +2098,14 @@ class OperatorSpec extends SparkTestBase {
       .createTempDirectory("graft_adaptcoll").toFile.getAbsolutePath
     spark.range(80).toDF("id").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    val (key, _) = AdaptiveCount.keyOf(df)
+    val (key, (files, digest)) = AdaptiveCount.keyOf(df)
+    def poison(session: AnyRef, files: Seq[String], digest: String): Unit =
+      AdaptiveCount.memo.cache.put((System.identityHashCode(spark), key),
+        graft.sources.SnapshotMemo.Entry(
+          new java.lang.ref.WeakReference[AnyRef](session),
+          (files, digest), 999L))
     // (a) same hash key, different file list = hash collision
-    AdaptiveCount.cache.put(key, AdaptiveCount.Entry(
-      new java.lang.ref.WeakReference[AnyRef](spark),
-      Array("someone/elses/part-000.parquet"),
-      AdaptiveCount.planDigestOf(df), 999L))
+    poison(spark, Seq("someone/elses/part-000.parquet"), digest)
     val m0 = AdaptiveCount.misses.get()
     assert(AdaptiveCount.of(df) == 80L,
       "a colliding entry must be recounted, not served")
@@ -2112,10 +2114,7 @@ class OperatorSpec extends SparkTestBase {
     assert(AdaptiveCount.of(spark.read.parquet(dir)) == 80L)
     assert(AdaptiveCount.misses.get() == m0 + 1)
     // (b) right files, wrong session identity = identityHashCode reuse
-    val (key2, files2) = AdaptiveCount.keyOf(df)
-    AdaptiveCount.cache.put(key2, AdaptiveCount.Entry(
-      new java.lang.ref.WeakReference[AnyRef](new Object), files2,
-      AdaptiveCount.planDigestOf(df), 999L))
+    poison(new Object, files, digest)
     assert(AdaptiveCount.of(df) == 80L,
       "a session-aliased entry must be recounted, not served")
     assert(AdaptiveCount.misses.get() == m0 + 2)
@@ -2124,10 +2123,7 @@ class OperatorSpec extends SparkTestBase {
     // differ only in the 32-bit semanticHash — simulate that residual
     // collision by poisoning OUR key with a different plan digest, and
     // assert the digest comparison recounts instead of serving 999
-    val (key3, files3) = AdaptiveCount.keyOf(df)
-    AdaptiveCount.cache.put(key3, AdaptiveCount.Entry(
-      new java.lang.ref.WeakReference[AnyRef](spark), files3,
-      "not-the-plan-you-are-looking-for", 999L))
+    poison(spark, files, "not-the-plan-you-are-looking-for")
     assert(AdaptiveCount.of(df) == 80L,
       "a plan-digest mismatch must be recounted, not served")
     assert(AdaptiveCount.misses.get() == m0 + 3)

@@ -240,4 +240,102 @@ class TableSpec extends SparkTestBase {
     assert(headers == 3, s"expected 3 shard blocks, got $headers:\n$out")
     assert(out.contains("n_nationkey"), "schema header missing")
   }
+
+  /** Result of `f` and the number of Spark jobs it started from this
+    * thread, counted by job group. A marker job started afterwards is
+    * awaited: the listener bus delivers events in order, so once its
+    * start is seen every earlier job start has been counted. */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"table-spec-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup[B](g: String)(body: => B): B = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      val a = inGroup(group)(f)
+      inGroup(group + "-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "listener bus never delivered the marker job")
+      import scala.jdk.CollectionConverters._
+      (a, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("parquet schema memo: an unchanged snapshot is read with no Spark " +
+      "job; a rewritten file, a toggled conf or an emptied path is not served from it") {
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val base = Files.createTempDirectory("graft-schema-memo")
+    try {
+      // unchanged path: the first read infers (one footer job), the
+      // second is served from the memo with no job, same schema and rows
+      sources.Tables.read(spark, sf, "nation")
+        .write.parquet(s"$base/nation.parquet")
+      val (first, inferJobs) = withJobCount(sources.Tables.read(spark, base.toString, "nation"))
+      assert(inferJobs >= 1, "the first read of a fresh path must infer its schema")
+      val (second, jobs) = withJobCount(sources.Tables.read(spark, base.toString, "nation"))
+      assert(jobs == 0, s"re-reading an unchanged path ran $jobs Spark jobs")
+      assert(second.schema == first.schema)
+      assert(second.exceptAll(first).isEmpty && first.exceptAll(second).isEmpty)
+
+      // a file rewritten in place under the same name with another
+      // schema: ns-typed ts (LongType) replaced by a timestamp[us] file
+      val events = sources.Tables.read(spark, sf, "events")
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val ev = s"$base/ev/events.parquet"
+      TsPostureSpec.writeNsTyped(events.withColumn("ts",
+          expr("unix_micros(ts) * CAST(1000 AS BIGINT)")).collect().toSeq, ev)
+      assert(Table.readParquet(spark, ev).df.schema("ts").dataType == LongType)
+      assert(sources.Tables.tsStoredAsLong(spark, ev))
+      events.coalesce(1).write.parquet(s"$base/us")
+      val usFile = Files.list(Paths.get(s"$base/us")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".parquet")).head
+      Files.copy(usFile, Paths.get(ev, "part-00000.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      Files.deleteIfExists(Paths.get(ev, ".part-00000.parquet.crc"))
+      val rewritten = Table.readParquet(spark, ev).df
+      assert(rewritten.schema("ts").dataType == TimestampType,
+        "a file rewritten in place was read with its stale memoized schema")
+      assert(!sources.Tables.tsStoredAsLong(spark, ev))
+      assert(rewritten.exceptAll(events).isEmpty && events.exceptAll(rewritten).isEmpty)
+
+      // toggling nanosAsLong on the ns-vintage fixture flips what ts
+      // infers to, exactly as an unmemoized read does
+      val ns = s"$base/ns/events.parquet"
+      TsPostureSpec.writeNsTyped(events.withColumn("ts",
+          expr("unix_micros(ts) * CAST(1000 AS BIGINT)")).collect().toSeq, ns)
+      def tsType(read: => org.apache.spark.sql.DataFrame): Either[String, Any] =
+        scala.util.Try(read.schema("ts").dataType).toEither.left.map(_.getMessage)
+      assert(tsType(Table.readParquet(spark, ns).df) == Right(LongType))
+      val key = "spark.sql.legacy.parquet.nanosAsLong"
+      val saved = spark.conf.get(key)
+      spark.conf.set(key, "false")
+      try {
+        val memo = tsType(Table.readParquet(spark, ns).df)
+        assert(memo != Right(LongType), "nanosAsLong=false was served the LongType schema")
+        assert(memo == tsType(spark.read.parquet(ns)))
+      } finally spark.conf.set(key, saved)
+      assert(tsType(Table.readParquet(spark, ns).df) == Right(LongType))
+
+      // a path emptied after a successful read fails exactly as an
+      // unmemoized read of it does
+      val gone = s"$base/nation.parquet"
+      Files.list(Paths.get(gone)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .foreach(Files.delete)
+      val viaMemo = intercept[Exception](sources.Tables.read(spark, base.toString, "nation"))
+      val plain = intercept[Exception](spark.read.parquet(gone))
+      assert(viaMemo.getClass == plain.getClass && viaMemo.getMessage == plain.getMessage)
+    } finally graft.streaming.EventStreams.registerTreeCleanup(base.toFile)
+  }
 }

@@ -28,6 +28,7 @@ import org.apache.spark.sql.types._
   */
 class TsPostureSpec extends SparkTestBase {
   import spark.implicits._
+  import TsPostureSpec.writeNsTyped
 
   test("batch read lands canonical TimestampType on the shipped corpus") {
     val ev = sources.Tables.read(spark, sf, "events")
@@ -39,43 +40,6 @@ class TsPostureSpec extends SparkTestBase {
       .head()
     assert(yr.getInt(0) >= 2000 && yr.getInt(1) <= 2100,
       s"events.ts years [${yr.getInt(0)}, ${yr.getInt(1)}] look misscaled")
-  }
-
-  /** Author a TIMESTAMP(NANOS)-typed events parquet file — the one
-    * vintage Spark itself cannot write — through parquet-java's example
-    * writer. Test-only driver-side loop over the tiny sf0.001 slice. */
-  private def writeNsTyped(rows: Seq[org.apache.spark.sql.Row],
-      dir: String): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val schema = Types.buildMessage()
-      .optional(INT64).named("event_id")
-      .optional(INT64).as(LogicalTypeAnnotation.timestampType(true,
-        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
-      .optional(INT64).named("user_id")
-      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
-      .optional(DOUBLE).named("value")
-      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
-      .named("events")
-    new java.io.File(dir).mkdirs()
-    val conf = new org.apache.hadoop.conf.Configuration()
-    GroupWriteSupport.setSchema(schema, conf)
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-00000.parquet"))
-      .withConf(conf).withType(schema).build()
-    val fac = new SimpleGroupFactory(schema)
-    try rows.foreach { r =>
-      val g = fac.newGroup()
-      if (!r.isNullAt(0)) g.add("event_id", r.getLong(0))
-      if (!r.isNullAt(1)) g.add("ts", r.getLong(1)) // ns since epoch
-      if (!r.isNullAt(2)) g.add("user_id", r.getLong(2))
-      if (!r.isNullAt(3)) g.add("event_type", r.getString(3))
-      if (!r.isNullAt(4)) g.add("value", r.getDouble(4))
-      if (!r.isNullAt(5)) g.add("props", r.getString(5))
-      w.write(g)
-    } finally w.close()
   }
 
   /** Write the sf events slice in EVERY storage vintage and assert the
@@ -166,5 +130,44 @@ class TsPostureSpec extends SparkTestBase {
     val saved = spark.conf.get(key)
     spark.conf.set(key, t)
     try f finally spark.conf.set(key, saved)
+  }
+}
+
+object TsPostureSpec {
+  /** Author a TIMESTAMP(NANOS)-typed events parquet file — the one
+    * vintage Spark itself cannot write — through parquet-java's example
+    * writer. Test-only driver-side loop over the tiny sf0.001 slice. */
+  def writeNsTyped(rows: Seq[org.apache.spark.sql.Row],
+      dir: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val schema = Types.buildMessage()
+      .optional(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(true,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .optional(INT64).named("user_id")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
+      .optional(DOUBLE).named("value")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("events")
+    new java.io.File(dir).mkdirs()
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-00000.parquet"))
+      .withConf(conf).withType(schema).build()
+    val fac = new SimpleGroupFactory(schema)
+    try rows.foreach { r =>
+      val g = fac.newGroup()
+      if (!r.isNullAt(0)) g.add("event_id", r.getLong(0))
+      if (!r.isNullAt(1)) g.add("ts", r.getLong(1)) // ns since epoch
+      if (!r.isNullAt(2)) g.add("user_id", r.getLong(2))
+      if (!r.isNullAt(3)) g.add("event_type", r.getString(3))
+      if (!r.isNullAt(4)) g.add("value", r.getDouble(4))
+      if (!r.isNullAt(5)) g.add("props", r.getString(5))
+      w.write(g)
+    } finally w.close()
   }
 }
