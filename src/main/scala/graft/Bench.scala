@@ -171,12 +171,6 @@ object Bench {
       extra = clusterExtra)
     sys.env.get("SPARK_GRAFT_PREFER_SHJ").foreach(v =>
       spark.conf.set("spark.sql.join.preferSortMergeJoin", (v != "1").toString))
-    // SPARK_GRAFT_WIDEN=0/off disables operators.Par.widen's parallelism
-    // repair — the second A/B knob of the r13-directive-4 attribution
-    // run (isolation × widen decompose the 56→71 s shift).
-    sys.env.get("SPARK_GRAFT_WIDEN").foreach(v =>
-      spark.conf.set(graft.operators.Par.WidenConfKey,
-        if (v == "0" || v.equalsIgnoreCase("off")) "off" else "on"))
 
     val startedAt = java.time.Instant.now().toString
     val loadStart = java.lang.management.ManagementFactory
@@ -198,20 +192,12 @@ object Bench {
     }
 
     // Per-query executor task-time (Σ executorRunTime over the query's
-    // stages), r18 per VERDICT r17 #2: at gate scale the heavy queries
-    // are driver/latency-bound, so their wall-clock barely moves with
-    // the core count and the driver's scaling heuristic misreads ≈1
-    // wall ratios as an ignored SPARK_GRAFT_CPUS. task_time_ms next to
-    // wall-time makes the scaling contract legible: where wall ≈ flat
-    // but task-time ≫ wall, the query parallelized fine and the wall
-    // floor is latency, not compute. PASSIVE listener + two AtomicLong
-    // reads OUTSIDE the timed region — timing semantics unchanged
-    // (the r17 comparability freeze; warmPassQueries is FROZEN too:
-    // changes require a verdict directive). Listener delivery is
-    // async; the read happens after the post-query cleanup (clearCache
-    // + GC, several ms), so stragglers land in the right bucket in
-    // practice — a diagnostic field, not a gate. Removed once the diag
-    // is written.
+    // stages): where wall ≈ flat across core counts but task-time ≫
+    // wall, the query parallelized fine and the wall floor is latency,
+    // not compute. A passive listener read outside the timed region,
+    // after the post-query release and GC, so async stragglers land in
+    // the right bucket in practice — a diagnostic field, not a gate.
+    // Removed once the diag is written.
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong()
     val taskTimeListener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -242,48 +228,18 @@ object Bench {
         names
       }.getOrElse(headline)
 
-    // SPARK_GRAFT_ISOLATE=0/off: skip the inter-query cache/RDD/GC
-    // cleanup below — the A/B knob that decomposes a round-over-round
-    // shift into methodology (isolation) vs plan changes (VERDICT r13
-    // directive 4). Default ON: cold-start-honest per-query numbers.
-    val isolate = !sys.env.get("SPARK_GRAFT_ISOLATE")
-      .exists(v => v == "0" || v.equalsIgnoreCase("off"))
+    // Each headline query and warm-pass run is one operators.Scratch
+    // scope: the caches and cuts it takes are released when it ends, so
+    // they never accumulate and starve later queries' execution memory
+    // (execution evicts storage only down to storageFraction). Cache
+    // population happens inside each query's own timer, so timings stay
+    // cold-start honest; the release and a GC nudge sit outside it.
 
-    // Inter-query cleanup, shared by the timed loop and the warm pass.
-    // Each headline query is a self-contained pipeline measurement;
-    // the caches some operators pin (minhash signatures, band
-    // tables) are per-pipeline scratch whose documented reclaim
-    // path is clearCache. Left in place they accumulate across the
-    // suite and — because execution can only evict storage down to
-    // spark.memory.storageFraction — starve LATER queries'
-    // execution memory into spills (sf10: in-suite q135 ran 3x its
-    // solo time before this line). Cache population still happens
-    // inside each query's own timer, so timings stay cold-start
-    // honest; clearing sits outside the timed region.
-    def isolateCleanup(): Unit = if (isolate) {
-      spark.catalog.clearCache()
-      // localCheckpoint blocks from iterative operators (pagerank,
-      // label-prop lineage cuts) are persistent RDDs that stay PINNED
-      // until driver GC lets the ContextCleaner at them — tens of GB
-      // that the storageFraction floor then protects from eviction,
-      // pushing later queries' sorts/aggs into early spill (sf10:
-      // in-suite q199 ran ~4x its solo time). Unpersist them
-      // explicitly and nudge GC so each measurement starts clean.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-
-    // --- warm pass (VERDICT r16 #2): ONE uncounted execution of the
-    // documented high-variance family before anything is timed. The r16
-    // graded artifact read 82.4 s against a 61.1–61.6 s quiet triple at
-    // the SAME commit with zero query-path change — all of the drift on
-    // the LSH/dedup heads, whose first execution pays cold page cache
-    // (input parquet + /tmp index scratch) and JIT of the heavy operator
-    // paths. The warm pass absorbs exactly that, so a SINGLE fresh run
-    // (the driver's protocol) measures the engine, not the page cache.
-    // Spark-side state is still torn down after it (isolateCleanup), so
-    // per-query timings stay cold-start honest w.r.t. Spark caches.
+    // --- warm pass: ONE uncounted execution of the documented
+    // high-variance family before anything is timed, absorbing the
+    // cold page cache (input parquet + /tmp index scratch) and JIT of
+    // the heavy operator paths, so a SINGLE fresh run measures the
+    // engine, not the page cache.
     // SPARK_GRAFT_WARMPASS=0/off disables (A/B attribution knob).
     val warmPass = !sys.env.get("SPARK_GRAFT_WARMPASS")
       .exists(v => v == "0" || v.equalsIgnoreCase("off"))
@@ -297,12 +253,13 @@ object Bench {
       System.err.println(s"[bench] warm pass (uncounted) over " +
         s"${warmed.size} high-variance queries")
       warmed.foreach { name =>
-        try materialize(SparkEntry.queries(name)(spark, sfDir))
+        try graft.operators.Scratch.scoped(spark)(
+          materialize(SparkEntry.queries(name)(spark, sfDir)))
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm pass $name failed " +
             s"(ignored — the timed run reports it): ${e.getMessage}")
         }
-        isolateCleanup()
+        System.gc()
       }
     }
 
@@ -313,29 +270,29 @@ object Bench {
 
     def runSuite(): Seq[(String, Double)] = headlineRun.map { name =>
       // the warmed family is also MEDIAN-OF-3 timed (see
-      // warmPassQueries): isolation cleanup runs between reps, so each
-      // rep is the same cold-Spark-state measurement as a single run
+      // warmPassQueries), each rep in its own scope
       val reps = if (warmPass && stabilized.contains(name)) 3 else 1
       val times = (1 to reps).map { _ =>
         val g0 = gcMillis()
         val tt0 = taskTimeMs.get()
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        // elapsed is read HERE — before any cleanup — so clearCache /
-        // unpersist / System.gc pauses never inflate the reported time
-        // (ADVICE r13: the cleanup used to run inside the timed region).
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        gcByQuery(name) = gcMillis() - g0
-        heapByQuery(name) = heapUsedMb()
-        isolateCleanup()
-        // task-time read AFTER the cleanup (outside the timed region;
-        // gives the async listener bus time to drain) — last rep wins,
-        // matching gc_ms/heap_mb's convention
+        val (ok, elapsed) = graft.operators.Scratch.scoped(spark) {
+          val t0 = System.nanoTime()
+          val ok =
+            try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+            }
+          // read before the scope's release: the release and the GC
+          // below never inflate the reported time
+          val elapsed = (System.nanoTime() - t0) / 1e9
+          gcByQuery(name) = gcMillis() - g0
+          heapByQuery(name) = heapUsedMb()
+          (ok, elapsed)
+        }
+        System.gc()
+        // task-time read after the release (the listener bus drains);
+        // last rep wins, as for gc_ms/heap_mb
         taskByQuery(name) = taskTimeMs.get() - tt0
         // -1 marks a failure so a fast crash can't masquerade as fast
         if (ok) elapsed else -1.0
@@ -522,7 +479,6 @@ object Bench {
     // Full-diagnostics line: everything a cross-round investigation
     // needs (per-run demo times, GC, heap, load averages). Written to
     // target/bench.json AND printed FIRST on stdout.
-    val widenConf = spark.conf.get(graft.operators.Par.WidenConfKey, "on")
     // adaptive_count_misses: the one-count-per-corpus-per-session
     // contract ([[graft.operators.AdaptiveCount]]) observable in every
     // committed artifact, not just its unit test (VERDICT r15 #5) — a
@@ -546,7 +502,7 @@ object Bench {
     val queryRunsJson = repsByQuery.map { case (k, vs) =>
       jq(k) + ":" + vs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val diag = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jq(sfDir)},"failed":$failedJson,"demo_runs":$demoRuns,"demo_gate":"best_of_runs","gc_ms":$gcJson,"heap_mb":$heapJson,"started_at":"$startedAt","load_avg_start":$loadStart,"load_avg_end":$loadEnd,"contended":$contended,"isolate":$isolate,"widen":${jq(widenConf)},"master":${jq(master)},"adaptive_count_misses":$adaptMisses,"warmup":${jq(warmupNote)},"warmpass":${warmed.size},"warmpass_extra":${warmExtra.map(jq).mkString("[", ",", "]")},"runs":$suiteReps,"suite_runs":$suiteRunsJson,"query_runs":$queryRunsJson,"task_time_ms":$taskJson,"baseline_demo_2m_sec":10.718802}"""
+    val diag = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jq(sfDir)},"failed":$failedJson,"demo_runs":$demoRuns,"demo_gate":"best_of_runs","gc_ms":$gcJson,"heap_mb":$heapJson,"started_at":"$startedAt","load_avg_start":$loadStart,"load_avg_end":$loadEnd,"contended":$contended,"master":${jq(master)},"adaptive_count_misses":$adaptMisses,"warmup":${jq(warmupNote)},"warmpass":${warmed.size},"warmpass_extra":${warmExtra.map(jq).mkString("[", ",", "]")},"runs":$suiteReps,"suite_runs":$suiteRunsJson,"query_runs":$queryRunsJson,"task_time_ms":$taskJson,"baseline_demo_2m_sec":10.718802}"""
     // Compact gate line, printed LAST: the driver keeps only the final
     // ~2000 chars of stdout, and the full diagnostics line is ~2.6k —
     // in r11 it was front-truncated past parseability ("parsed": null).

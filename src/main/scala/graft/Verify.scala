@@ -311,31 +311,24 @@ object Verify {
           }
         }
     }
-    // Queries run in BATCHES with a cache-reclaim barrier between them
-    // (r18, ADVICE r17 #4): several operators pin clearCache-reclaimed
-    // session caches / checkpoint RDDs (minhash signatures, union-size
-    // cuts, ParWindow's ranged table), and a 306-query sweep with no
-    // reclaim accumulates them all — the same storageFraction
-    // memory-pressure mechanism Bench's isolateCleanup documents.
-    // Bench cleans BETWEEN queries (sequential); here queries run 4-way
-    // concurrent, and clearing mid-flight would yank a consistency-
-    // critical cache out from under a running query — so the reclaim
-    // only runs at batch barriers where nothing is in flight. Batches
-    // of 24 keep the barrier idle-tail cost ~5% of the sweep.
-    SparkEntry.queries.toSeq
+    // Each query runs in its own operators.Scratch scope on its pool
+    // thread: the caches and cuts it takes are released as soon as its
+    // output is written, so a 306-query sweep never accumulates them
+    // (the storageFraction memory pressure Bench documents).
+    val futures = SparkEntry.queries.toSeq
       .filter { case (name, _) =>
         only.forall(_.contains(name)) && !clampExcluded.contains(name) }
-      .grouped(24).foreach { batch =>
-        val futures = batch.map { case (name, fn) =>
-          scala.concurrent.Future { runOne(name, fn) }
+      .map { case (name, fn) =>
+        scala.concurrent.Future {
+          // runOne records its own failures; a failed release only leaks
+          try graft.operators.Scratch.scoped(spark)(runOne(name, fn))
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[verify] $name storage release failed: $e")
+          }
         }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration.Inf)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
       }
+    scala.concurrent.Await.result(scala.concurrent.Future.sequence(futures),
+      scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
     dumpErrors()
     // diag.json: run-level observability riding the output dir —

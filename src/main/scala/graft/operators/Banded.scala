@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   * Storage convention (every incremental probe): a caller that passes
   * its own band table of the batch (`batchBands = Some(...)`) owns that
   * table's storage, and the probe pins nothing — no cache, no lineage
-  * cut — so a loop can band once per micro-batch, share the table
-  * between probes and the index append, and unpersist it. Without one,
-  * the probe bands the batch itself, caches it, and cuts the batch-sized
-  * subtrees its plan references more than once. */
+  * cut — so a loop can band once per micro-batch and share the table
+  * between probes and the index append. Without one, the probe bands
+  * the batch itself, caches it, and cuts the batch-sized subtrees its
+  * plan references more than once ([[Scratch]] owns both). */
 object Banded {
 
   /** A family's band table: key columns (with `idCol`, the table's
@@ -162,20 +162,21 @@ object Banded {
       nBuckets: Int, banding: Option[(Params, (Int, Int))],
       withSizes: Boolean = true): Unit = {
     val spark = bands.sparkSession
-    // both writes read the bands: banded once, released after
-    val b = if (withSizes) bands.cache() else bands
-    graft.sources.Tables.dropTable(spark, table)
-    banding.foreach { case (p, (t, pb)) =>
-      graft.sources.Tables.writeTable(
-        spark.range(1).select(lit(t).as(p.total.toLowerCase),
-          lit(pb).as(p.perBand.toLowerCase)),
-        s"${table}_banding")
+    Scratch.scoped(spark) {
+      // both writes read the bands: banded once, released after
+      val b = if (withSizes) Scratch.cache(bands) else bands
+      graft.sources.Tables.dropTable(spark, table)
+      banding.foreach { case (p, (t, pb)) =>
+        graft.sources.Tables.writeTable(
+          spark.range(1).select(lit(t).as(p.total.toLowerCase),
+            lit(pb).as(p.perBand.toLowerCase)),
+          s"${table}_banding")
+      }
+      if (withSizes)
+        graft.sources.Tables.writeTable(sizes(b, layout.keys),
+          s"${table}_sizes")
+      graft.sources.Tables.writeBucketed(b, table, layout.keys, nBuckets)
     }
-    if (withSizes)
-      graft.sources.Tables.writeTable(sizes(b, layout.keys), s"${table}_sizes")
-    graft.sources.Tables.writeBucketed(b, table, layout.keys, nBuckets)
-    if (withSizes) b.unpersist(blocking = false)
-    ()
   }
 
   /** Grow an index by `bands` — the append-partials convention: their
@@ -254,7 +255,7 @@ object Banded {
       unionSizes: Option[DataFrame] = None,
       out: Seq[Column] = Nil): DataFrame = {
     val owned = batchBands.isDefined
-    val batch = batchBands.getOrElse(band.cache())
+    val batch = batchBands.getOrElse(Scratch.cache(band))
     val corpus = batch.sparkSession.table(index)
     val id = layout.idCol
     if (cap == Uncapped) {
@@ -274,7 +275,7 @@ object Banded {
     // once (union sizes: both truncated sides; truncated batch: two
     // legs), so each plan reference is a scan rather than a re-planned
     // copy of the subtree
-    def pinned(df: DataFrame): DataFrame = if (owned) df else Dedup.cut(df)
+    def pinned(df: DataFrame): DataFrame = if (owned) df else Scratch.cut(df)
     val sizes = hinted(unionSizes.getOrElse(pinned {
       val corpusSizes =
         try batch.sparkSession.table(s"${index}_sizes")

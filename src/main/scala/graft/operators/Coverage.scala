@@ -35,7 +35,7 @@ object Coverage {
     require(k >= 1)
     val spark = pairs.sparkSession
     import spark.implicits._
-    val p = Dedup.cut(
+    val p = Scratch.cut(
       pairs.select(col(itemCol).as("item"), col(featureCol).as("f"))
         .distinct())
     var covered: DataFrame = null // feature set covered so far
@@ -59,20 +59,20 @@ object Coverage {
         val (item, gain) = top.head
         cum += gain
         picks += ((round, item, gain, cum))
-        val c = Dedup.cut(
+        val c = Scratch.cut(
           if (covered == null)
             p.filter(col("item") === item).select("f")
           else
             covered.unionAll(
               p.filter(col("item") === item).select("f")).distinct())
-        if (prevCut != null) Dedup.release(prevCut)
+        if (prevCut != null) Scratch.release(prevCut)
         prevCut = c
         covered = c
         round += 1
       }
     }
-    Dedup.release(p)
-    if (prevCut != null) Dedup.release(prevCut)
+    Scratch.release(p)
+    if (prevCut != null) Scratch.release(prevCut)
     picks.toSeq.toDF("round", "item", "gain", "covered_cum")
   }
 }

@@ -198,10 +198,9 @@ object Dedup {
     val (kk, rr) = resolveMinhash(df, k, rows)
     graft.functions.TextNative.register(df.sparkSession)
     // Signatures only (~100 B/doc), cached so band construction can't
-    // re-evaluate the minhash per band reference; the returned lazy plan
-    // references the cache, so callers reclaim it (clearCache/unpersist).
-    val sig = Par.widen(df).select(col(idCol),
-      expr(s"graft_minhash($textCol, $kk)").as("_sig")).cache()
+    // re-evaluate the minhash per band reference
+    val sig = Scratch.cache(Par.widen(df).select(col(idCol),
+      expr(s"graft_minhash($textCol, $kk)").as("_sig")))
     val cand = Banded.pairs(bandsOf(sig, idCol, kk, rr), bandLayout(idCol),
       bucketCap)
     verifyJaccard(cand, df, idCol, textCol, threshold)
@@ -284,14 +283,13 @@ object Dedup {
       oneShot: Boolean = true): DataFrame = {
     // referenced three times below: one eager cut (id pairs only) makes
     // each reference a scan, not a re-planned collision-join subtree
-    val cand = if (oneShot) cut(cand0) else cand0
+    val cand = if (oneShot) Scratch.cut(cand0) else cand0
     val candIds = cand.select(col("ida").as(idCol))
       .union(cand.select(col("idb").as(idCol))).distinct()
-    // read twice (sa/sb): cached, candidate docs are shingled once;
-    // callers reclaim it like [[minhashPairs]]'s cache
+    // read twice (sa/sb): cached, candidate docs are shingled once
     val sets0 = withShingles(df.join(candIds, idCol), textCol)
       .select(col(idCol), col("shset"))
-    val sets = if (oneShot) sets0.cache() else sets0
+    val sets = if (oneShot) Scratch.cache(sets0) else sets0
     val sa = sets.select(col(idCol).as("ida"), col("shset").as("seta"))
     val sb = sets.select(col(idCol).as("idb"), col("shset").as("setb"))
     cand.join(sa, "ida").join(sb, "idb")
@@ -488,11 +486,10 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4,
       "4 chunks only guarantee recall for Hamming <= 3")
-    val chunks = simhashWide(df, idCol, textCol, bits = 60)
+    val chunks = Scratch.cache(simhashWide(df, idCol, textCol, bits = 60)
       .select(col(idCol), col("simhash"), posexplode(expr(
         "transform(sequence(0, 3), c -> shiftright(simhash, c * 15) & 32767)"))
-        .as(Seq("ci", "cv")))
-      .cache()
+        .as(Seq("ci", "cv"))))
     Banded.selfJoin(chunks,
         Banded.Layout(Seq("ci", "cv"), idCol, Some(4L << 15)), Banded.Uncapped)
       .select(col(s"x.$idCol").as("ida"), col(s"y.$idCol").as("idb"),
@@ -532,37 +529,6 @@ object Dedup {
     * members directly), so this is a handful of hash joins, each an
     * ordinary shuffle on ids. maxIter bounds pathological chains.
     */
-  /** Eagerly materialize `df` and CUT its lineage. Reliable
-    * `checkpoint` when the session has a checkpoint dir (REQUIRED under
-    * dynamic allocation / decommissioning, e.g. `Graft.elasticity` — a
-    * retired executor takes localCheckpoint blocks with it and a
-    * truncated lineage has no recompute path); `localCheckpoint`
-    * otherwise (fixed-executor and local runs). */
-  private[operators] def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** Free a checkpointed frame's storage NOW (Dataset.unpersist is a
-    * no-op for checkpoint blocks — they live at the RDD layer, not in
-    * the CacheManager). Only for frames that are never read again:
-    * a released local checkpoint has no recompute path. */
-  private[operators] def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      // reliable checkpoints also leave FILES in the checkpoint dir,
-      // and the context GC cleaner only reaps them when
-      // spark.cleaner.referenceTracking.cleanCheckpoints is on (off by
-      // default) — delete them eagerly, we know the frame is dead
-      val ckpt = lr.rdd.getCheckpointFile
-      lr.rdd.unpersist(blocking = false)
-      ckpt.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
-    case _ => df.unpersist()
-  }
-
   def dupClusters(pairs: DataFrame, a: String = "ida", b: String = "idb",
       maxIter: Int = 25): DataFrame = {
     // Eager lineage cuts, twice over: (1) the pair pipeline (LSH join +
@@ -574,32 +540,30 @@ object Dedup {
     // lineage). Intermediates are unpersisted as soon as the next
     // round's result is materialized, so at most ~3 corpus-scale
     // materializations are live at once.
-    val p = cut(pairs)
+    val p = Scratch.cut(pairs)
     // undirected edges + one self-loop per node, so the per-round
     // neighbor-min is a single join+agg (no in-loop Union: a Union over
     // a join-derived checkpoint trips Catalyst's union constraint
     // rewrite on the checkpoint's stale origin constraints)
     val undirected = p.select(col(a).as("src"), col(b).as("dst"))
       .union(p.select(col(b).as("src"), col(a).as("dst")))
-    val edges = cut(undirected
+    val edges = Scratch.cut(undirected
       .union(undirected.select(col("src"), col("src").as("dst")))
       .distinct())
-    release(p)
-    var labels = cut(edges.select(col("src").as("id"))
+    Scratch.release(p)
+    var labels = Scratch.cut(edges.select(col("src").as("id"))
       .distinct().withColumn("lbl", col("id")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       // neighbor-min (self-loop carries each node's own label) — cached,
       // NOT checkpointed: its lineage is one join+agg over already-cut
-      // frames (no lineage growth), and a plain persist is reclaimable
-      // right below, whereas a reliable checkpoint would leak a
-      // snapshot per iteration to the checkpoint dir
-      val combined = edges
+      // frames (no lineage growth), so a plain persist suffices and no
+      // checkpoint is written per iteration
+      val combined = Scratch.cache(edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
-        .withColumnRenamed("dst", "id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumnRenamed("dst", "id"))
       combined.count() // fill the cache so the self-join reads it twice
       // pointer-doubling shortcut: also adopt the label OF my label
       // (lbl is always a member id, so the inner self-join keeps every
@@ -607,17 +571,17 @@ object Dedup {
       // in O(diameter) rounds, which a chain-shaped cluster turns into
       // a wrong answer at maxIter (observed at sf0.1); with the jump
       // it is O(log diameter).
-      val next = cut(combined.as("l")
+      val next = Scratch.cut(combined.as("l")
         .join(combined.as("m"), col("l.lbl") === col("m.id"))
         .select(col("l.id").as("id"), least(col("l.lbl"), col("m.lbl")).as("lbl")))
-      combined.unpersist(blocking = false)
+      Scratch.release(combined)
       converged = next.join(labels.withColumnRenamed("lbl", "old"), "id")
         .filter(col("lbl") =!= col("old")).isEmpty
-      release(labels)
+      Scratch.release(labels)
       labels = next
       i += 1
     }
-    release(edges)
+    Scratch.release(edges)
     if (!converged)
       System.err.println(s"[dedup] dupClusters stopped at maxIter=$maxIter " +
         "before convergence — canonicals may split one true component " +

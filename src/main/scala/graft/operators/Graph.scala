@@ -54,7 +54,7 @@ object Graph {
     // node table and the degree join below; uncut, each of those
     // materialization jobs re-ran the full upstream scan + distinct
     // shuffle (guide §1.2: don't compute things twice).
-    val e = Dedup.cut(
+    val e = Scratch.cut(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // out-degree rides WITH the broadcast RANK table, not the edge
     // table (r18; guide §1.2): the r17 spelling materialized an
@@ -67,11 +67,11 @@ object Graph {
     // is materialized ONCE and never re-derived, re-joined at scale,
     // or re-shuffled (broadcast regime). The degree cut is
     // node-cardinality — near-free.
-    val deg = Dedup.cut(e.groupBy("src").agg(count(lit(1)).as("deg")))
+    val deg = Scratch.cut(e.groupBy("src").agg(count(lit(1)).as("deg")))
     // nodes = src ∪ dst, with the src leg read from `deg` (already
     // distinct, node-cardinality) instead of `e` — the union-distinct
     // then shuffles |e| + |srcs| rows rather than 2|e| (r18).
-    val nodes = Dedup.cut(deg.select(col("src").as("node"))
+    val nodes = Scratch.cut(deg.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     // Rank/contribution tables are NODE-cardinality while the loop's
     // joins run against EDGE-cardinality — when nodes fit a broadcast
@@ -104,18 +104,17 @@ object Graph {
       // the final ranks are always cut (callers get a materialized,
       // re-readable frame exactly as before)
       ranks = if (i % cutEvery == 0 || i == iters) {
-        val c = Dedup.cut(next)
-        if (prevCut != null) Dedup.release(prevCut)
+        val c = Scratch.cut(next)
+        if (prevCut != null) Scratch.release(prevCut)
         prevCut = c
         c
       } else next
     }
     // the loop-support checkpoints are dead once the final rank table
-    // is materialized — free them now (checkpoint blocks are not
-    // reaped by GC/unpersist; see Dedup.release)
-    Dedup.release(nodes)
-    Dedup.release(e)
-    Dedup.release(deg)
+    // is materialized — free them now
+    Scratch.release(nodes)
+    Scratch.release(e)
+    Scratch.release(deg)
     ranks
   }
 
@@ -139,9 +138,9 @@ object Graph {
     require(maxHops >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Dedup.cut(edges.select(col(srcCol).as("src"),
+    val e = Scratch.cut(edges.select(col(srcCol).as("src"),
       col(dstCol).as("dst")))
-    var dist = Dedup.cut(
+    var dist = Scratch.cut(
       sourceIds.toDF("node").withColumn("d", lit(0)))
     var prev = dist
     for (_ <- 1 to maxHops) {
@@ -151,13 +150,13 @@ object Graph {
       val hop = e
         .join(side, "src")
         .select(col("dst").as("node"), (col("d") + 1).as("d"))
-      val next = Dedup.cut(dist.unionAll(hop)
+      val next = Scratch.cut(dist.unionAll(hop)
         .groupBy("node").agg(min("d").as("d")))
-      Dedup.release(prev)
+      Scratch.release(prev)
       prev = next
       dist = next
     }
-    Dedup.release(e) // edge checkpoint is dead once dist is materialized
+    Scratch.release(e) // edge checkpoint is dead once dist is materialized
     dist
   }
 
@@ -184,9 +183,9 @@ object Graph {
       iters: Int, broadcastLimit: Long = 5000000L): DataFrame = {
     require(iters >= 1)
     val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-    val und = Dedup.cut(
+    val und = Scratch.cut(
       e0.unionAll(e0.select(col("b").as("a"), col("a").as("b"))).distinct())
-    val nodes = Dedup.cut(und.select(col("a").as("id")).distinct())
+    val nodes = Scratch.cut(und.select(col("a").as("id")).distinct())
     val small = nodes.count() < broadcastLimit
     def side(df: DataFrame) = if (small) broadcast(df) else df
     var labels = nodes.withColumn("lbl", col("id"))
@@ -202,13 +201,13 @@ object Graph {
         .select(col("a").as("id"), (-col("w.nl")).as("lbl2"))
       val next = labels.join(side(arg), Seq("id"), "left")
         .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
-      val c = Dedup.cut(next)
-      if (prevCut != null) Dedup.release(prevCut)
+      val c = Scratch.cut(next)
+      if (prevCut != null) Scratch.release(prevCut)
       prevCut = c
       labels = c
     }
-    Dedup.release(und)
-    Dedup.release(nodes)
+    Scratch.release(und)
+    Scratch.release(nodes)
     labels
   }
 

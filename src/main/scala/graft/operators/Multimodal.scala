@@ -587,8 +587,7 @@ object Multimodal {
   def aHashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4,
       "4 chunks only guarantee recall for Hamming <= 3")
-    val chunks = aHashChunkTable(hashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val chunks = Scratch.cache(aHashChunkTable(hashes))
     Banded.selfJoin(chunks, chunkLayout, ChunkCap)
       .select(col("x.doc_id").as("ida"), col("y.doc_id").as("idb"),
         hammingXY)

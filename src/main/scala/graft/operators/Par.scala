@@ -41,52 +41,26 @@ import org.apache.spark.sql.DataFrame
   * bit-identical with or without the widen. */
 object Par {
 
-  /** Session-conf kill switch (`off` disables the repair): the
-    * benchmark's A/B lever for attributing suite-total shifts to the
-    * widen exchange vs everything else. Results are identical either
-    * way — only parallelism changes — so flipping it is always safe. */
-  val WidenConfKey = "spark.graft.widen"
-
-  /** Session-conf lower bound (bytes) below which widen never fires.
-    * The r14 attribution A/B measured the missing term in the r13
-    * design: for a TINY input the per-row compute being parallelized
-    * is also tiny, so the exchange + per-call physical-planning
-    * overhead dominates — widen-on cost ~20 s across the sf0.1 suite
-    * (q85 21.0 s vs 10.5 s widen-off) while repairing nothing. The
-    * benefit only exists where single-threading the per-row loops is
-    * material — and it starts EARLY: at sf1 (~5 MB single-row-group
-    * embeddings) the widen is worth ~10× on the LSH family (q135
-    * 61.2 s with a 16 MB floor vs 6.1 s with the repair firing — the
-    * r14 floor-placement A/B), because ~20k rows × per-row signature
-    * cost already dwarfs a 5 MB exchange. Floor default 2 MB: the
-    * gate corpus (~0.5 MB heads, where the A/B measured pure cost)
-    * passes through untouched; sf1 (~5 MB) and sf10 (~60 MB) heads
-    * widen. */
+  /** Session-conf lower bound (bytes) below which widen never fires;
+    * a floor above every input disables the repair (results are
+    * identical either way — only parallelism changes). For a tiny input
+    * the exchange and per-call physical planning cost more than the
+    * per-row compute they parallelize; from ~5 MB (sf1 embeddings) the
+    * single-threaded signature loops dominate. Default 2 MB: gate-scale
+    * heads (~0.5 MB) pass through untouched, sf1 and sf10 heads widen. */
   val WidenFloorKey = "spark.graft.widenFloor"
   val DefaultWidenFloor: Long = 2L << 20
 
-  /** r18: the floor is now a CALL-SITE parameter (session conf still
-    * wins when set — the A/B lever is preserved). Rationale: the 2 MB
-    * default was measured on the TEXT family, where the suite-visible
-    * cost of widening gate-scale inputs is per-call physical planning
-    * across q85's many plan references (r14 A/B: q85 21.0 s vs
-    * 10.5 s), and it correctly keeps those paths floored. But the
-    * EMBEDDING family is the opposite regime: a handful of widen calls
-    * per query and a per-row signature/quantization cost so high that
-    * even the sf0.1 corpus (0.8 MB file, ONE scan split) runs a ~2 s
-    * single-task broadcast build (the r18 q135 JobProbe read: stage 9,
-    * 1 task, 2.1 s taskTime under the collision-side broadcast).
-    * [[Similarity.prepare]] passes `floorOverride = 0` — measured at
-    * sf0.1: q135 4.4/3.2 s → 2.2/1.9 s warm reps with the repair
-    * firing; results bit-identical (round-robin is row-preserving,
-    * operators above are repartition-invariant by spec). */
+  /** The floor as a call-site parameter (a session conf still wins):
+    * the embedding family's per-row signature/quantization cost is high
+    * enough that even its sf0.1 corpus (one scan split) gains from the
+    * repair, so [[Similarity.prepare]] passes `floorOverride = 0`. */
   private[graft] def widen(df: DataFrame): DataFrame =
     widen(df, DefaultWidenFloor)
 
   private[graft] def widen(df: DataFrame, floorOverride: Long): DataFrame = {
     if (df.isStreaming) return df // micro-batch frames arrive pre-split
     val spark = df.sparkSession
-    if (spark.conf.get(WidenConfKey, "on") == "off") return df
     val target = spark.sparkContext.defaultParallelism
     val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))

@@ -146,15 +146,19 @@ object ParWindow {
     // input, but each independent evaluation re-samples under its own
     // column pruning — one materialization = one boundary array for
     // every consumer; task retries re-read the same blocks).
-    val ranged = Dedup.cut(keyed
-      .withColumn("_sv", sumCol.cast("bigint"))
+    // the sum value rides as an appended internal column whose name no
+    // input column takes (case-insensitively), dropped by index below
+    val taken = keyed.columns.map(_.toLowerCase).toSet
+    val sv = Iterator.from(0).map(i => s"_sv$i").find(n => !taken(n)).get
+    val ranged = Scratch.cut(keyed
+      .withColumn(sv, sumCol.cast("bigint"))
       .repartitionByRange(p, (part +: sortExprs): _*)
       .sortWithinPartitions((part +: sortExprs): _*))
     val schema = ranged.schema
     val pi = schema.fieldIndex(partCol)
     val kis = orderKeys.map(k => schema.fieldIndex(k._1)).toArray
     val li = schema.fieldIndex(lagCol)
-    val si = schema.fieldIndex("_sv")
+    val si = schema.fieldIndex(sv)
 
     // ---- pass 1: one summary row per (chunk, part) segment ----
     val segs: Array[SegSum] = ranged.rdd.mapPartitionsWithIndex {
@@ -198,7 +202,7 @@ object ParWindow {
     // ---- pass 2: one streaming merge pass per chunk ----
     val lagType = schema(li).dataType
     val outSchema = StructType(
-      schema.fields.filterNot(_.name == "_sv") ++ Seq(
+      schema.fields.patch(si, Nil, 1) ++ Seq(
         StructField(rnName, IntegerType, nullable = false),
         StructField(rkName, IntegerType, nullable = false),
         StructField(prevName, lagType, nullable = true),
@@ -234,7 +238,7 @@ object ParWindow {
         val run: Any = if (nnSeen == 0L) null else java.lang.Long.valueOf(runSum)
         lastKey = key
         lastLagVal = r.get(li)
-        Row.fromSeq(r.toSeq.dropRight(1) ++
+        Row.fromSeq(r.toSeq.patch(si, Nil, 1) ++
           Seq(grn.toInt, rk.toInt, prev, run))
       }
     }

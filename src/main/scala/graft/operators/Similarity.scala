@@ -162,7 +162,7 @@ object Similarity {
     var prevCut: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       val assigned = probe(prep, cent, idCol, nprobe = 1)
-      val next = Dedup.cut(assigned
+      val next = Scratch.cut(assigned
         .select(col("cent_id"), posexplode(col("q")).as(Seq("pos", "v")))
         .groupBy("cent_id", "pos")
         .agg(expr("SUM(v) DIV COUNT(*)").as("m"))
@@ -170,7 +170,7 @@ object Similarity {
         .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
           .as("cq"))
         .withColumn("cn2", dotQ("cq", "cq")))
-      prevCut.foreach(Dedup.release)
+      prevCut.foreach(Scratch.release)
       prevCut = Some(next)
       cent = next
     }
@@ -202,11 +202,10 @@ object Similarity {
     // ONE prepare+slice pass, cached: every Lloyd iteration AND the
     // encode pass reads the same sliced table — previously each of the
     // iters+1 jobs re-parsed and re-sliced the full corpus (guide §1.2:
-    // fix the passes before the per-task work). MEMORY_AND_DISK (cache
-    // default) spills rather than OOMs at scale; callers reclaim via
-    // clearCache as with [[Dedup.minhashPairs]]'s signature cache.
+    // fix the passes before the per-task work). MEMORY_AND_DISK
+    // spills rather than OOMs at scale.
     val prep = prepare(df, embCol)
-    val sub = pqSlices(prep, idCol, m, subLen).cache()
+    val sub = Scratch.cache(pqSlices(prep, idCol, m, subLen))
     val cent = pqTrainOn(prep, sub, idCol, m, k, iters, subLen)
     val coded = pqAssign(sub, cent, idCol)
       .select(col(idCol), col("sub"),
@@ -249,9 +248,9 @@ object Similarity {
       embCol: String, m: Int, k: Int, iters: Int, subLen: Int,
       topK: Int): DataFrame = {
     // one cached prepare+slice pass shared by training, the code table
-    // and the query LUT (see [[pqEncode]]'s cache contract)
+    // and the query LUT (as in [[pqEncode]])
     val prep = prepare(df, embCol)
-    val sub = pqSlices(prep, idCol, m, subLen).cache()
+    val sub = Scratch.cache(pqSlices(prep, idCol, m, subLen))
     val cent = pqTrainOn(prep, sub, idCol, m, k, iters, subLen)
     val codes = pqAssign(sub, cent, idCol)
       .select(col(idCol).as("vec_id"), col("sub"),
@@ -368,8 +367,7 @@ object Similarity {
     val prep = prepare(df, embCol)
     // cached: each Lloyd iteration's cut job re-read this sliced table
     // instead of re-parsing + re-slicing the corpus per iteration
-    // (same contract as [[pqEncode]]'s cache — caller-reclaimed)
-    val sub = pqSlices(prep, idCol, m, subLen).cache()
+    val sub = Scratch.cache(pqSlices(prep, idCol, m, subLen))
     pqTrainOn(prep, sub, idCol, m, k, iters, subLen)
   }
 
@@ -385,7 +383,7 @@ object Similarity {
       .select(col("sub"), col("cid"), col("sq").as("cq"))
     var prevCut: Option[DataFrame] = None
     for (_ <- 1 to iters) {
-      val next = Dedup.cut(pqAssign(sub, cent, idCol)
+      val next = Scratch.cut(pqAssign(sub, cent, idCol)
         .select(col("sub"), col("w.cid").as("cid"),
           posexplode(col("w.sq")).as(Seq("pos", "v")))
         .groupBy("sub", "cid", "pos")
@@ -394,7 +392,7 @@ object Similarity {
         .agg(expr(
           "transform(array_sort(collect_list(struct(pos, mv))), x -> x.mv)")
           .as("cq")))
-      prevCut.foreach(Dedup.release)
+      prevCut.foreach(Scratch.release)
       prevCut = Some(next)
       cent = next
     }

@@ -76,38 +76,17 @@ object Sketches {
     * usable where that doesn't fire (e.g. non-equi follow-up joins or
     * pre-aggregation pruning). */
   def bloomPrune(probe: DataFrame, keyCol: Column, bits: DataFrame,
-      k: Int, m: Int, cacheBits: Boolean = true): DataFrame = {
+      k: Int, m: Int): DataFrame = {
     // The bit set feeds k joins; without a cache the build subtree
     // (scan + distinct) re-executes per join (ReuseExchange does not
     // fire across the per-join column renames). It is ≤ m rows by
-    // construction, so cache it by default — same deliberate trade as
-    // the minhash signature cache (Dedup.minhashPairs): the entry must
-    // outlive this call because the result is lazy, and Spark evicts
-    // LRU if memory is ever tight. A caller looping over batches should
-    // pass cacheBits=false and persist/unpersist the bits itself around
-    // the loop (the Banded probes' batchBands storage convention).
-    val cached =
-      if (cacheBits)
-        bits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else bits
+    // construction; the cache must outlive this call because the
+    // result is lazy ([[Scratch]] releases it with the caller's scope).
+    val cached = Scratch.cache(bits)
     (0 until k).foldLeft(probe) { (df, i) =>
       df.join(cached.withColumnRenamed("pos", s"_bp$i"),
         position(keyCol, i, m) === col(s"_bp$i"), "left_semi")
     }
-  }
-
-  /** [[bloomPrune]] whose cache the CALLER releases: returns the pruned
-    * frame plus an unpersist handle to call after the result is
-    * materialized. Use this from loops / long-lived sessions where the
-    * default cacheBits=true entry (deliberately left for the session,
-    * see bloomPrune) would accumulate — the same persist/release
-    * convention as the Banded probes' batchBands. */
-  def bloomPruneReleasable(probe: DataFrame, keyCol: Column,
-      bits: DataFrame, k: Int, m: Int): (DataFrame, () => Unit) = {
-    val cached =
-      bits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pruned = bloomPrune(probe, keyCol, cached, k, m, cacheBits = false)
-    (pruned, () => { cached.unpersist(); () })
   }
 
   /** Register rows of the deterministic HLL-style distinct sketch

@@ -209,9 +209,9 @@ object TextAnalysis {
   def bpeTrain(tf: DataFrame, k: Int): DataFrame = {
     val spark = tf.sparkSession
     graft.functions.TextNative.register(spark)
-    val vocab = tf.filter(length(col("w")) >= 2)
-      .select(col("w"), col("f").cast("long").as("f")).cache()
-    try {
+    Scratch.scoped(spark) {
+      val vocab = Scratch.cache(tf.filter(length(col("w")) >= 2)
+        .select(col("w"), col("f").cast("long").as("f")))
       val merges = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
       var r = 1
       var done = false
@@ -245,6 +245,6 @@ object TextAnalysis {
       }
       import spark.implicits._
       merges.toSeq.toDF("rk", "merge", "cnt")
-    } finally { vocab.unpersist(); () }
+    }
   }
 }

@@ -581,7 +581,8 @@ object EventStreams {
   }
 
   /** Stage `delta` as landed parquet files and stream them back with
-    * `onBatch` invoked per micro-batch — the shared file-ingest loop
+    * `onBatch` invoked per micro-batch, each inside its own
+    * [[graft.operators.Scratch]] scope — the shared file-ingest loop
     * under [[runDeltaStream]] (events, raw ns shape) and
     * [[streamingAdmissionStream]] (documents). Staging + checkpoint
     * trees are exit-hook deleted recursively. */
@@ -627,7 +628,9 @@ object EventStreams {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
           if (killTop.exists(done.get() >= _))
             throw new RuntimeException("graft-chaos-kill")
-          onBatch(batch.toDF(), bid)
+          // what a micro-batch caches or cuts dies with it
+          graft.operators.Scratch.scoped(batch.sparkSession)(
+            onBatch(batch.toDF(), bid))
           // fires ONCE (the restart must re-run this same batch to
           // completion), after the side effect, before the counter —
           // the commit for this batch never happens on this run
@@ -741,14 +744,11 @@ object EventStreams {
       pairsTable)
     runStagedStream(spark, prefix, delta, schema, maxFilesPerTrigger,
       deltaFiles, onBatch = (mb, _) => {
-        val bands = band(mb)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val bands = graft.operators.Scratch.cache(band(mb))
         probe(mb, index, bands).union(probe(mb, bandsTable, bands))
           .dropDuplicates("ida", "idb")
           .write.mode("append").format("parquet").saveAsTable(pairsTable)
         bands.write.mode("append").format("parquet").saveAsTable(bandsTable)
-        bands.unpersist()
-        ()
       }, chaosKillAfter = chaosKillAfter)
     spark.table(pairsTable).dropDuplicates("ida", "idb")
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.{Banded, Dedup}
+import graft.operators.{Banded, Dedup, Scratch}
 
 /** Continuous ingest with near-dup admission — the streaming face of
   * the incremental dedup family (Dedup.writeBandIndex /
@@ -63,12 +63,12 @@ object IngestStream {
       textCol: String, k: Int, rows: Int, threshold: Double,
       nBuckets: Int): Unit = {
     val spark = batch.sparkSession
-    val b = batch.select(col(idCol), col(textCol)).cache()
-    // bands computed ONCE per batch, caller-managed storage: the
-    // probe and the index append both read them, and the persist
-    // is released before the next batch (no per-batch cache leak)
-    val bands = Dedup.bandTable(b, idCol, textCol, k, rows).persist()
-    try {
+    // everything this batch caches or cuts is released when it ends
+    Scratch.scoped(spark) {
+      val b = Scratch.cache(batch.select(col(idCol), col(textCol)))
+      // bands computed ONCE per batch, caller-owned storage: the probe
+      // and the index append both read them
+      val bands = Scratch.cache(Dedup.bandTable(b, idCol, textCol, k, rows))
       val corpus = corpusDocs(spark, corpusPath, idCol, textCol)
       val pairs = Dedup.incrementalPairs(b, bandTable,
         corpus.unionByName(b), idCol, textCol, k, rows, threshold,
@@ -77,14 +77,13 @@ object IngestStream {
       // on a replayed batch the decision's verify stage reads the very
       // `batch=<id>` partition the idempotent overwrite below is about
       // to delete — lazily evaluated, that is a read-after-delete race
-      // (whether it bites depends on AQE's stage order). localCheckpoint
-      // (eager) CUTS THE LINEAGE, not just caches it: a MEMORY_ONLY
-      // cache() + count() narrows but does not close the race, because
-      // an evicted partition recomputes from the original plan AFTER
-      // the partition has been overwritten. Checkpointed partitions
-      // replicate to disk-backed storage and never re-read the source.
-      val admitted =
-        Dedup.admitBatch(b, pairs, idCol).localCheckpoint(eager = true)
+      // (whether it bites depends on AQE's stage order). An eager cut
+      // CUTS THE LINEAGE, not just caches it: a MEMORY_ONLY cache() +
+      // count() narrows but does not close the race, because an
+      // evicted partition recomputes from the original plan AFTER the
+      // partition has been overwritten. Checkpointed partitions never
+      // re-read the source.
+      val admitted = Scratch.cut(Dedup.admitBatch(b, pairs, idCol))
       // per-batch partition + overwrite = replay-idempotent store
       admitted.write.mode("overwrite")
         .parquet(s"$corpusPath/batch=$batchId")
@@ -101,9 +100,7 @@ object IngestStream {
         bands.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
       Banded.appendIndex(admittedBands, Dedup.bandLayout(idCol), bandTable,
         nBuckets)
-      admitted.unpersist()
-      ()
-    } finally { bands.unpersist(); b.unpersist() }
+    }
   }
 
   /** Maintenance compaction: rebuild the band index in one shot from

@@ -2371,6 +2371,26 @@ class OperatorSpec extends SparkTestBase {
     }
   }
 
+  test("ParWindow.runningWindow keeps a caller's _sv column: the " +
+      "parallel path equals the classic path column for column") {
+    val rows = (0 until 120).map { i =>
+      (if (i % 2 == 0) "A" else "B", s"sv$i", i.toLong, 50.0 - i / 10,
+        (i % 5).toLong)
+    }.toDF("part", "_sv", "k1", "price", "qty")
+    def run(gateBytes: Long) = operators.ParWindow.runningWindow(rows,
+      "part", Seq(("price", false), ("k1", true)), lagCol = "qty",
+      sumCol = col("qty"), rnName = "rn", rkName = "rk",
+      prevName = "prev", runName = "run", chunks = 3,
+      gateBytes = gateBytes)
+    val classic = run(Long.MaxValue)
+    val par = run(0L)
+    assert(par.schema.map(f => (f.name, f.dataType)) ==
+      classic.schema.map(f => (f.name, f.dataType)))
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(canon(par) == canon(classic))
+  }
+
   test("ParWindow.chunkOffsets propagates tie-group starts and " +
       "null-sum partials across multi-chunk spans (synthetic summaries)") {
     import operators.ParWindow.{SegSum, ChunkOff, chunkOffsets}

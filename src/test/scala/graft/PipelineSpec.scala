@@ -518,21 +518,28 @@ class PipelineSpec extends SparkTestBase {
       selfJoin.exceptAll(rowLocal).isEmpty)
   }
 
-  test("bloomPruneReleasable: same result, cache released by handle") {
+  test("bloomPrune: same result as the uncached bit set, cache released " +
+      "with its scope") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val urgent = spark.read.parquet(s"$sf/orders.parquet")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val bits = Sketches.bloomBuild(urgent, "o_orderkey", k = 3, m = 1 << 18)
-    val (pruned, release) = Sketches.bloomPruneReleasable(
-      li, col("l_orderkey"), bits, k = 3, m = 1 << 18)
-    val plain = Sketches.bloomPrune(li, col("l_orderkey"), bits,
-      k = 3, m = 1 << 18, cacheBits = false)
-    assert(pruned.count() == plain.count())
-    val before = spark.sparkContext.getPersistentRDDs.size
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size < before,
-      "release handle must drop the cached bit set")
+    val (k, m) = (3, 1 << 18)
+    val bits = Sketches.bloomBuild(urgent, "o_orderkey", k, m)
+    // the same k semi-joins against the bit set, uncached
+    val plain = (0 until k).foldLeft(li) { (df, i) =>
+      df.join(bits.withColumnRenamed("pos", s"_bp$i"),
+        Sketches.position(col("l_orderkey"), i, m) === col(s"_bp$i"),
+        "left_semi")
+    }
+    val want = plain.count()
+    val held = operators.Scratch.scoped(spark) {
+      val pruned = Sketches.bloomPrune(li, col("l_orderkey"), bits, k, m)
+      assert(pruned.count() == want)
+      spark.sparkContext.getPersistentRDDs.size
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size < held,
+      "the scope must drop the cached bit set")
   }
 
   test("snapshot diff round-trips: applyChanges(old, diff(old, new)) == new") {

@@ -629,11 +629,10 @@ class ScaleSpec extends SparkTestBase {
       assert(operators.Par.widen(preSplit) eq preSplit,
         "an input already planned at >= target/2 partitions must " +
           "pass through untouched")
-      // kill switch: spark.graft.widen=off disables the repair entirely
-      spark.conf.set(operators.Par.WidenConfKey, "off")
-      try assert(operators.Par.widen(starved) eq starved,
-        "the conf kill switch must bypass the repair")
-      finally spark.conf.unset(operators.Par.WidenConfKey)
+      // kill switch: a floor above every input disables the repair
+      spark.conf.set(operators.Par.WidenFloorKey, Long.MaxValue.toString)
+      assert(operators.Par.widen(starved) eq starved,
+        "a floor above the input must bypass the repair")
     } finally spark.conf.unset(operators.Par.WidenFloorKey)
   }
 }

@@ -243,6 +243,22 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed.count() > 0)
   }
 
+  test("an ingest micro-batch releases its caches and its admission cut") {
+    import graft.operators.Dedup
+    val all = sources.Tables.read(spark, sf, "documents")
+    spark.sql("DROP TABLE IF EXISTS ingest_leak_idx")
+    Dedup.writeBandIndex(all.filter(lit(false)), "doc_id", "text",
+      "ingest_leak_idx", nBuckets = 8)
+    val corpusPath = java.nio.file.Files
+      .createTempDirectory("graft-leak-corpus").toString + "/docs"
+    val before = pinned()
+    streaming.IngestStream.processBatch(
+      all.filter($"doc_id" < 250).select($"doc_id", $"text"), 0L,
+      "ingest_leak_idx", corpusPath, "doc_id", "text", 8, 2, 0.5, 8)
+    assertNoneLeft(before, "an ingest micro-batch")
+    assert(spark.read.parquet(corpusPath).count() > 0)
+  }
+
   test("ingest batch replay is idempotent; compaction folds duplicate bands") {
     import graft.operators.Dedup
     val all = sources.Tables.read(spark, sf, "documents")
